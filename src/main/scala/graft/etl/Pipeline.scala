@@ -3,8 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.geo.{GeoUdfs, Jts}
-import graft.raster.{AsciiGrid, RasterOps}
+import graft.geo.Jts
+import graft.raster.{AsciiGrid, GeoTiff, RasterOps}
 import graft.sinks.ZipSink
 
 /** The composed end-to-end pipeline (SURVEY.md §3 lifecycle): the
@@ -12,20 +12,23 @@ import graft.sinks.ZipSink
   * DataFrame graph.
   *
   * {{{
-  * binaryFile scan (*.asc, recursive)            SRC-1  (glob pushdown)
-  *  → filename decode + region-from-path         PRJ-1/8
+  * asciigrid scan (*.asc, recursive)             SRC-1  (glob pushdown)
+  *   header columns + values, parsed once per grid
+  *  → filename decode                            PRJ-1
   *  → broadcast dim decode joins → rename        JOIN-2, PRJ-2
-  *  → × broadcast(regions ≠ "99")                JOIN-1, PRJ-3/4
-  *  → clip grid by region polygon + stats        OP-SP-3, AGG-2
-  *  → metadata doc (reprojected footprint)       OP-SP-5/6, D5
+  *  → × broadcast(regions ≠ "99", footprint)     JOIN-1, PRJ-3/4, OP-SP-5/6
+  *  → one product per pair: clip + stats,        OP-SP-3, AGG-2
+  *    .asc / .wld / .tif from the one clip
+  *  → metadata doc                               D5
   *  → zip sink + json sink + catalog             SNK-3/4
   * }}}
   *
   * Anti-optimizations of the reference eliminated by construction
   * (SURVEY.md §4.1): the region layer is read once and broadcast (not
-  * re-fetched per file); no per-region directory re-listing; the
-  * (file × region) clip tasks are embarrassingly parallel across
-  * executors instead of strictly serial.
+  * re-fetched per file); no per-region directory re-listing; each grid
+  * is converted once, not once per region; the (file × region) clip
+  * tasks are embarrassingly parallel across executors instead of
+  * strictly serial.
   */
 object Pipeline {
 
@@ -33,34 +36,30 @@ object Pipeline {
   final case class Result(catalog: DataFrame,
       metrics: Map[String, Any] = Map.empty)
 
-  private val clipUdf = udf { (text: String, wkt: String) =>
-    val clipped = RasterOps.clip(AsciiGrid.parse(text), Jts.parseWkt(wkt))
-    val s = RasterOps.stats(clipped)
-    (AsciiGrid.write(clipped), clipped.ncols, clipped.nrows,
-      s.nValid, s.nNodata, s.min, s.max, s.sum)
+  /** One product per (grid × region) pair, all from the one clipped grid:
+    * (.asc text, ncols, nrows, n_valid, n_nodata, min, max, sum,
+    * .wld text, .tif bytes). The grid arrives as the scan's header and
+    * `values` columns; the reference zips the ESRI sidecars and the .tif
+    * Clip_management wrote (ETL.py:5,303–346). An empty clip (region
+    * outside the grid) gets an empty world file and a zero-byte .tif,
+    * mirroring how the reference's failed clips leave no raster payload.
+    */
+  private val productUdf = udf { (g: AsciiGrid, wkt: String) =>
+    val c = RasterOps.clip(g, Jts.parseWkt(wkt))
+    val s = RasterOps.stats(c)
+    val empty = c.ncols == 0 || c.nrows == 0
+    // world file: cellsize / rotation / center of the upper-left cell
+    val wld =
+      if (empty) ""
+      else s"${c.cellsize}\n0.0\n0.0\n-${c.cellsize}\n${c.centerX(0)}\n${c.centerY(0)}\n"
+    (AsciiGrid.write(c), c.ncols, c.nrows, s.nValid, s.nNodata, s.min, s.max, s.sum,
+      wld, if (empty) Array.emptyByteArray else GeoTiff.write(c, srid = 2193))
   }
 
-  // world-file sidecar (the reference zips the ESRI sidecars created by
-  // Clip, ETL.py:5,315–346): cellsize / rotation / center of upper-left
-  private val worldFileUdf = udf { (text: String) =>
-    val g = AsciiGrid.parse(text)
-    if (g.ncols == 0) ""
-    else s"${g.cellsize}\n0.0\n0.0\n-${g.cellsize}\n${g.centerX(0)}\n${g.centerY(0)}\n"
-  }
-
-  // SNK-1: the clipped raster itself as GeoTIFF bytes in NZTM2000 —
-  // the reference zips the .tif Clip_management wrote (ETL.py:303–346);
-  // an empty clip (region outside the grid) zips a zero-byte entry,
-  // mirroring how the reference's failed clips leave no raster payload
-  private val geoTiffUdf = udf { (text: String) =>
-    val g = AsciiGrid.parse(text)
-    if (g.ncols == 0 || g.nrows == 0) Array.empty[Byte]
-    else graft.raster.GeoTiff.write(g, srid = 2193)
-  }
-
-  /** The pipeline's source stage: the asciigrid DataSource V2 scan,
-    * pruned to (path, text) — the scan never tokenizes cell values the
-    * clip UDF re-parses anyway — with an optional source-region scope.
+  /** The pipeline's source stage: the asciigrid DataSource V2 scan with
+    * an optional source-region scope; each caller projects the columns
+    * it needs (the pipeline reads the header columns and `values`, so
+    * each grid is tokenized once, in the scan).
     * The scope is expressed as a `path` predicate so the DSv2 pushdown
     * applies it at FILE LISTING time: a run scoped to one region-code
     * directory of a 100 TB tree opens only that directory's files
@@ -70,7 +69,7 @@ object Pipeline {
   def sourceFiles(spark: SparkSession, inputDir: String,
       srcRegion: Option[String] = None): DataFrame = {
     val scan = spark.read.format("asciigrid").load(inputDir)
-    val scoped = srcRegion match {
+    srcRegion match {
       case Some(code) =>
         // two predicates, one job each: the contains() is a pushable
         // string filter the DSv2 source applies at FILE LISTING time
@@ -83,7 +82,6 @@ object Pipeline {
           element_at(split(col("path"), "/"), -2) === code)
       case None => scan
     }
-    scoped.select(col("path"), col("text"))
   }
 
   /** Run the full pipeline.
@@ -108,8 +106,10 @@ object Pipeline {
     // SRC-1/5: the asciigrid DataSource V2 — recursive .asc listing with
     // the suffix filter applied in the listing itself, one grid per row.
     val files = sourceFiles(spark, inputDir, srcRegion)
+      .select(col("path"), struct(col("ncols"), col("nrows"), col("xllcorner"),
+        col("yllcorner"), col("cellsize"), col("nodata"), col("values")).as("grid"))
 
-    // PRJ-1/2/8 + JOIN-2: decode & rename.
+    // PRJ-1/2 + JOIN-2: decode & rename.
     val pDim = broadcast(Lookups.parameterDim(spark)
       .select(col("code").as("parameter_code"), col("name").as("parameter_name")))
     val tDim = broadcast(Lookups.periodDim(spark)
@@ -118,7 +118,6 @@ object Pipeline {
     val decoded = files
       .withColumn("file_name", element_at(split(col("path"), "/"), -1))
       .withColumn("base_name", element_at(split(col("file_name"), "\\.asc$"), 1))
-      .withColumn("src_region_code", Filenames.regionCodeFromPath(col("path")))
       .withColumn("parameter_code", Filenames.parameterCode(col("base_name")))
       .withColumn("statistic", Filenames.statistic(col("base_name")))
       .withColumn("period_token", Filenames.periodToken(col("base_name")))
@@ -127,21 +126,21 @@ object Pipeline {
       .withColumn("new_file_name",
         Filenames.newFileName(col("parameter_name"), col("statistic"), col("period_name")))
 
-    // JOIN-1 + PRJ-3/4: cross join the broadcast region dim.
+    // JOIN-1 + PRJ-3/4: cross join the broadcast region dim; the
+    // region-constant footprint (OP-SP-5/6) is computed once per region.
     val dims = broadcast(regions
       .filter(col("code") =!= "99")
       .select(col("code").as("region_code"), col("name").as("region_name"),
         Filenames.normalizeTitle(col("raw_title")).as("region_title"),
-        col("wkt").as("region_wkt")))
+        col("wkt").as("region_wkt"), ringCoords(col("wkt")).as("region_coords")))
 
     val pairs = decoded.crossJoin(dims)
       .withColumn("clipped_name",
         Filenames.clippedName(col("new_file_name"), col("region_name")))
 
-    // OP-SP-3 + AGG-2: clip & stats, one task per (file × region).
+    // OP-SP-3 + AGG-2: one product per (file × region) task.
     val clipped = pairs
-      .withColumn("cl", clipUdf(col("text"), col("region_wkt")))
-      .withColumn("clipped_text", col("cl._1"))
+      .withColumn("cl", productUdf(col("grid"), col("region_wkt")))
       .withColumn("stats_text", concat_ws("\n",
         concat(lit("n_valid "), col("cl._4")),
         concat(lit("n_nodata "), col("cl._5")),
@@ -149,25 +148,26 @@ object Pipeline {
         concat(lit("max "), col("cl._7")),
         concat(lit("sum "), col("cl._8"))))
 
-    // OP-SP-5/6 + D5: metadata document with reprojected footprint.
-    val fileStem = element_at(split(col("clipped_name"), "\\.tif$"), 1)
+    // D5: metadata document with the region's reprojected footprint.
     val typeParam = Filenames.dashToSpace(col("parameter_name"))
-    val geojson = GeoUdfs.st_reproject_geojson(col("region_wkt"))
     val withDocs = clipped
-      .withColumn("file_stem", fileStem)
-      .withColumn("geojson_str", geojson)
+      .withColumn("file_stem", element_at(split(col("clipped_name"), "\\.tif$"), 1))
       .withColumn("metadata_json", MetadataJson.doc(
         prefix = lit(prefix),
         fileStem = col("file_stem"),
         title = MetadataJson.title(typeParam, col("period_name"), col("region_title")),
         description = MetadataJson.description(typeParam, col("statistic"),
           lit("1991-2020"), col("period_name"), col("region_title")),
-        coords = ringCoords(col("region_wkt")),
+        coords = col("region_coords"),
         parameter = typeParam,
         period = col("period_name"),
         statistic = col("statistic"),
         region = col("region_title"),
         updatedAt = lit(updatedAt)))
+      // the persisted frame: product columns only
+      .select(col("base_name"), col("new_file_name"), col("clipped_name"),
+        col("region_code"), col("region_name"), col("region_title"),
+        col("cl"), col("stats_text"), col("metadata_json"), col("file_stem"))
 
     // SNK-7 counterpart at scale: data-quality counters ride the
     // existing materialization via observe() — an AccumulatorV2 under
@@ -184,7 +184,7 @@ object Pipeline {
       approx_count_distinct(col("region_code")).as("n_regions"))
 
     // the three consumers below (catalog, zips, docs) share one
-    // materialization of the expensive clip+reproject work; released in
+    // materialization of the expensive clip and product work; released in
     // the finally so repeated runs in a shared session don't leak blocks
     observed.persist()
     try {
@@ -195,20 +195,19 @@ object Pipeline {
       col("cl._2").as("ncols_out"), col("cl._3").as("nrows_out"),
       col("cl._4").as("n_valid"), col("cl._5").as("n_nodata"),
       col("cl._8").as("sum_valid"),
-      col("clipped_text"), col("stats_text"), col("metadata_json"),
+      col("cl._1").as("clipped_text"), col("stats_text"), col("metadata_json"),
       col("file_stem"))
 
     // SNK-3: zip of sidecar group (clipped raster + world file + stats).
     val zips = observed.select(
       concat(col("file_stem"), lit(".zip")).as("zip_name"),
       array(
-        struct(concat(col("file_stem"), lit(".asc")).as("name"), col("clipped_text").as("content")),
-        struct(concat(col("file_stem"), lit(".wld")).as("name"), worldFileUdf(col("clipped_text")).as("content")),
+        struct(concat(col("file_stem"), lit(".asc")).as("name"), col("cl._1").as("content")),
+        struct(concat(col("file_stem"), lit(".wld")).as("name"), col("cl._9").as("content")),
         struct(concat(col("file_stem"), lit(".stats.txt")).as("name"), col("stats_text").as("content")),
       ).as("entries"),
       array(
-        struct(concat(col("file_stem"), lit(".tif")).as("name"),
-          geoTiffUdf(col("clipped_text")).as("content")),
+        struct(concat(col("file_stem"), lit(".tif")).as("name"), col("cl._10").as("content")),
       ).as("bin_entries"))
     ZipSink.write(zips, s"$sinkRoot/zipped")
 

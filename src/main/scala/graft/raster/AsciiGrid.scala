@@ -18,9 +18,10 @@ package graft.raster
   * The reference never touches pixels in-language (arcpy streams
   * file→file); here the grid is a first-class typed record so clipping
   * and statistics are native columnar operations. At scale a grid
-  * travels as one row (`binaryFile` source → parse) — a 500 m NZ-wide
-  * grid is ~5 MB of text, far under per-row limits, and per-file
-  * parallelism is the natural partitioning.
+  * travels as one row (the asciigrid source parses each file once into
+  * header columns plus a `values` array) — a 500 m NZ-wide grid is
+  * ~5 MB of text, far under per-row limits, and per-file parallelism is
+  * the natural partitioning.
   */
 case class AsciiGrid(
     ncols: Int,
@@ -52,80 +53,65 @@ object AsciiGrid {
     * order-tolerant (matching common producers); values may span lines.
     */
   def parse(text: String): AsciiGrid = {
-    val tokens = text.split("\\s+").filter(_.nonEmpty)
+    val tokens = tokenize(text)
+    val (ncols, nrows, xll, yll, cell, nodata, start) = header(tokens)
+    val values = new Array[Double](tokens.length - start)
     var i = 0
-    var ncols, nrows = -1
-    var xll, yll, cell = Double.NaN
-    var nodata = -9999.0
-    var parsingHeader = true
-    // center→corner offsets resolved AFTER the loop: cellsize legally
-    // follows the xllcenter/yllcenter lines in standard ESRI headers
-    var xCenter, yCenter = false
-    val headerKeys = Set("ncols", "nrows", "xllcorner", "yllcorner",
-      "xllcenter", "yllcenter", "cellsize", "nodata_value")
-    while (parsingHeader && i + 1 < tokens.length) {
-      tokens(i).toLowerCase match {
-        case "ncols"        => ncols = tokens(i + 1).toInt; i += 2
-        case "nrows"        => nrows = tokens(i + 1).toInt; i += 2
-        case "xllcorner"    => xll = tokens(i + 1).toDouble; xCenter = false; i += 2
-        case "xllcenter"    => xll = tokens(i + 1).toDouble; xCenter = true; i += 2
-        case "yllcorner"    => yll = tokens(i + 1).toDouble; yCenter = false; i += 2
-        case "yllcenter"    => yll = tokens(i + 1).toDouble; yCenter = true; i += 2
-        case "cellsize"     => cell = tokens(i + 1).toDouble; i += 2
-        case "nodata_value" => nodata = tokens(i + 1).toDouble; i += 2
-        case _              => parsingHeader = false
-      }
-      if (i < tokens.length && !headerKeys.contains(tokens(i).toLowerCase))
-        parsingHeader = false
-    }
-    if (xCenter) xll -= 0.5 * cell
-    if (yCenter) yll -= 0.5 * cell
-    val values = new Array[Double](tokens.length - i)
-    var j = 0
-    while (i < tokens.length) { values(j) = tokens(i).toDouble; i += 1; j += 1 }
+    while (i < values.length) { values(i) = tokens(start + i).toDouble; i += 1 }
     AsciiGrid(ncols, nrows, xll, yll, cell, nodata, values)
   }
 
-  /** Header fields only (no cell block). `parseHeader` powers pruned
-    * scans in the asciigrid DataSource V2: a projection that skips the
-    * `values` column reads just the leading header lines and never
-    * tokenizes the (much larger) cell text.
-    */
-  final case class Header(ncols: Int, nrows: Int, xllcorner: Double,
-      yllcorner: Double, cellsize: Double, nodata: Double)
+  /** The whitespace-separated tokens of the textual format. */
+  def tokenize(text: String): Array[String] = text.split("\\s+").filter(_.nonEmpty)
 
   private val HeaderKeys = Set("ncols", "nrows", "xllcorner", "yllcorner",
     "xllcenter", "yllcenter", "cellsize", "nodata_value")
 
-  def parseHeader(text: String): Header = {
-    // two-pass: record raw values first, resolve the center→corner
-    // offset AFTER the loop — cellsize legally appears after the
-    // xllcenter/yllcenter lines in standard ESRI headers, so computing
-    // the offset inline would subtract 0.5 * NaN
-    var ncols, nrows = -1
-    var xll, yll, cell = Double.NaN
-    var xCenter, yCenter = false
+  /** The one header routine, shared by `parse` and the asciigrid source's
+    * header-only reads (which tokenize just a file's first 4 KiB): reads
+    * the key/value pairs at the front of `tokens` and stops at the first
+    * token that is not a header key, so a cut-off cell line is never
+    * misread as a header. Returns (ncols, nrows, xllcorner, yllcorner,
+    * cellsize, nodata, index of the first cell token).
+    *
+    * Throws IllegalArgumentException naming the key when ncols, nrows,
+    * x, y or cellsize is missing, cellsize is not finite and positive,
+    * or ncols/nrows is negative. A 0×0 grid (an empty clip) is legal.
+    */
+  def header(tokens: Array[String]): (Int, Int, Double, Double, Double, Double, Int) = {
+    var ncols, nrows = 0
+    var xll, yll, cell = 0.0
     var nodata = -9999.0
-    val lines = text.linesIterator
-    var parsing = true
-    while (parsing && lines.hasNext) {
-      val toks = lines.next().trim.split("\\s+").filter(_.nonEmpty)
-      if (toks.length >= 2 && HeaderKeys.contains(toks(0).toLowerCase)) {
-        toks(0).toLowerCase match {
-          case "ncols"        => ncols = toks(1).toInt
-          case "nrows"        => nrows = toks(1).toInt
-          case "xllcorner"    => xll = toks(1).toDouble; xCenter = false
-          case "xllcenter"    => xll = toks(1).toDouble; xCenter = true
-          case "yllcorner"    => yll = toks(1).toDouble; yCenter = false
-          case "yllcenter"    => yll = toks(1).toDouble; yCenter = true
-          case "cellsize"     => cell = toks(1).toDouble
-          case "nodata_value" => nodata = toks(1).toDouble
-        }
-      } else if (toks.nonEmpty) parsing = false
+    var xCenter, yCenter = false
+    var seen = Set.empty[String]
+    var i = 0
+    while (i + 1 < tokens.length && HeaderKeys.contains(tokens(i).toLowerCase)) {
+      val key = tokens(i).toLowerCase
+      val v = tokens(i + 1)
+      key match {
+        case "ncols"        => ncols = v.toInt
+        case "nrows"        => nrows = v.toInt
+        case "xllcorner"    => xll = v.toDouble; xCenter = false
+        case "xllcenter"    => xll = v.toDouble; xCenter = true
+        case "yllcorner"    => yll = v.toDouble; yCenter = false
+        case "yllcenter"    => yll = v.toDouble; yCenter = true
+        case "cellsize"     => cell = v.toDouble
+        case "nodata_value" => nodata = v.toDouble
+      }
+      seen += key.replace("center", "corner")
+      i += 2
     }
+    for (k <- Seq("ncols", "nrows", "xllcorner", "yllcorner", "cellsize"))
+      require(seen(k), s"ASCII grid header has no $k" +
+        (if (k.endsWith("corner")) s" or ${k.replace("corner", "center")}" else ""))
+    require(cell > 0 && !cell.isInfinite, s"ASCII grid cellsize must be finite and > 0, got $cell")
+    require(ncols >= 0, s"ASCII grid ncols must be >= 0, got $ncols")
+    require(nrows >= 0, s"ASCII grid nrows must be >= 0, got $nrows")
+    // center→corner offsets resolved AFTER the loop: cellsize legally
+    // follows the xllcenter/yllcenter lines in standard ESRI headers
     if (xCenter) xll -= 0.5 * cell
     if (yCenter) yll -= 0.5 * cell
-    Header(ncols, nrows, xll, yll, cell, nodata)
+    (ncols, nrows, xll, yll, cell, nodata, i)
   }
 
   /** Render back to the textual format (row-major, one row per line).

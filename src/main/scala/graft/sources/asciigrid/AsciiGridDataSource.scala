@@ -39,7 +39,7 @@ import graft.raster.AsciiGrid
   * the raster fleet" at 100 TB:
   *
   *   - column pruning (`SupportsPushDownRequiredColumns`): projections
-  *     that omit `values`/`text` never tokenize the cell block, AND
+  *     that omit `values` never tokenize the cell block, AND
   *     header-only reads fetch just the first 4 KiB of each file
   *     instead of the whole grid;
   *   - path-filter pushdown (`SupportsPushDownFilters`): equality /
@@ -447,10 +447,12 @@ final class SingleRowReader(row: InternalRow) extends PartitionReader[InternalRo
 
 /** Reads ONE grid file into ONE InternalRow, materializing only the
   * requested columns: header-only projections read a 4 KiB prefix and
-  * never tokenize the cell block; the raw `text` is retained only if
-  * asked for. With pushed header aggregates the emitted row is the
-  * per-file partial (one row per file — Spark's final aggregate merges
-  * them).
+  * never tokenize the cell block; a projection with `values` parses the
+  * file once and takes the header columns from that parse; the raw
+  * `text` is retained only if asked for. With pushed header aggregates
+  * the emitted row is the per-file partial (one row per file — Spark's
+  * final aggregate merges them). A malformed grid fails the read with
+  * an IllegalArgumentException naming the file.
   */
 final class AsciiGridPartitionReader(part: AsciiGridInputPartition,
     required: StructType, aggs: Seq[PushedAgg], fsConf: Map[String, String])
@@ -462,8 +464,9 @@ final class AsciiGridPartitionReader(part: AsciiGridInputPartition,
   private def needs(c: String): Boolean = required.fieldNames.contains(c)
 
   /** Header-only access: the 6 header lines always fit well inside the
-    * first 4 KiB; parseHeader stops at the first non-header line, so a
-    * truncated trailing cell line can never be misread as a header.
+    * first 4 KiB; `AsciiGrid.header` stops at the first non-header
+    * token, so a truncated trailing cell line can never be misread as a
+    * header.
     */
   private val HeaderPrefixBytes = 4096
 
@@ -499,15 +502,22 @@ final class AsciiGridPartitionReader(part: AsciiGridInputPartition,
         new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
       } finally in.close()
 
-    val header = AsciiGrid.parseHeader(text)
+    // one parse per file: with `values` the header comes from the grid;
+    // otherwise only the leading 4 KiB is tokenized, and only if a header
+    // column is asked for
+    val grid = if (needs("values")) Some(withPath(AsciiGrid.parse(text))) else None
+    lazy val (ncols, nrows, xll, yll, cell, nodata, _) = grid match {
+      case Some(g) => (g.ncols, g.nrows, g.xllcorner, g.yllcorner, g.cellsize, g.nodata, 0)
+      case None    => withPath(AsciiGrid.header(AsciiGrid.tokenize(text.take(HeaderPrefixBytes))))
+    }
 
     def headerValue(c: String): Any = c match {
-      case "ncols"     => header.ncols
-      case "nrows"     => header.nrows
-      case "xllcorner" => header.xllcorner
-      case "yllcorner" => header.yllcorner
-      case "cellsize"  => header.cellsize
-      case "nodata"    => header.nodata
+      case "ncols"     => ncols
+      case "nrows"     => nrows
+      case "xllcorner" => xll
+      case "yllcorner" => yll
+      case "cellsize"  => cell
+      case "nodata"    => nodata
     }
 
     row =
@@ -518,24 +528,24 @@ final class AsciiGridPartitionReader(part: AsciiGridInputPartition,
           case PushedAgg("count", _) => 1L: Any
           case PushedAgg(_, c)       => headerValue(c)
         }.toArray)
-      else {
-        val wantsCells = needs("values")
-        val vals = new Array[Any](required.length)
-        required.fieldNames.zipWithIndex.foreach { case (name, i) =>
-          vals(i) = name match {
-            case "path"   => UTF8String.fromString(part.path)
-            case "region" => UTF8String.fromString(part.region)
-            case "text"   => UTF8String.fromString(text)
-            case "values" if wantsCells =>
-              ArrayData.toArrayData(AsciiGrid.parse(text).values)
-            case c if AsciiGridTable.HeaderCols.contains(c) => headerValue(c)
-            case _ => null
-          }
-        }
-        new GenericInternalRow(vals)
-      }
+      else
+        new GenericInternalRow(required.fieldNames.map {
+          case "path"   => UTF8String.fromString(part.path)
+          case "region" => UTF8String.fromString(part.region)
+          case "text"   => UTF8String.fromString(text)
+          case "values" => ArrayData.toArrayData(grid.get.values)
+          case c        => headerValue(c)
+        })
     true
   }
+
+  /** Runs a parse, naming the file in the message of a malformed grid. */
+  private def withPath[T](body: => T): T =
+    try body
+    catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"asciigrid: ${part.path}: ${e.getMessage}", e)
+    }
 
   override def get(): InternalRow = row
   override def close(): Unit = ()

@@ -85,4 +85,27 @@ class AsciiGridSourceSpec extends SparkSpecBase {
       .filter(col("path").contains("/05/")).groupBy().count()
     assert(filtered.head().getLong(0) == 1L)
   }
+
+  test("header-only reads resolve center-convention headers listed before cellsize") {
+    val root = Files.createTempDirectory("graft-ascsrc-center")
+    Files.writeString(root.resolve("c.asc"),
+      "ncols 2\nnrows 2\nxllcenter 100.0\nyllcenter 200.0\n" +
+        "cellsize 10.0\nNODATA_value -9999\n1 2\n3 4\n")
+    val r = spark.read.format("asciigrid").load(root.toString)
+      .select("path", "xllcorner", "yllcorner").head()
+    assert(r.getAs[Double]("xllcorner") == 95.0 && r.getAs[Double]("yllcorner") == 195.0, s"$r")
+  }
+
+  test("a malformed header fails the read naming the file and the key") {
+    val root = Files.createTempDirectory("graft-ascsrc-bad")
+    Files.writeString(root.resolve("bad.asc"),
+      "ncols 1\nnrows 1\nxllcorner 0\nyllcorner 0\nNODATA_value -9999\n5\n")
+    Seq(Seq("path", "ncols"), Seq("path", "values")).foreach { cols =>
+      val e = intercept[Exception](
+        spark.read.format("asciigrid").load(root.toString).select(cols.map(col): _*).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(msgs.contains("bad.asc") && msgs.contains("cellsize"), s"$cols: $msgs")
+    }
+  }
 }

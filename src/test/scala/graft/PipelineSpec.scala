@@ -4,9 +4,15 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.zip.ZipFile
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import graft.etl.{Lookups, Pipeline}
-import graft.raster.{AsciiGrid, GridGen}
+import graft.raster.{AsciiGrid, GeoTiff, GridGen}
 
 /** End-to-end pipeline golden test (FIXTURES.md §B): synthesizes an
   * .asc input tree following the reference's filename grammar and
@@ -111,44 +117,46 @@ class PipelineSpec extends SparkSpecBase {
     val zips = Files.list(zipDir).iterator()
     var zipCount = 0
     var parsedTifs = 0
+    var emptyClips = 0
     zips.forEachRemaining { p =>
       if (p.toString.endsWith(".zip")) {
         zipCount += 1
+        val stem = p.getFileName.toString.stripSuffix(".zip")
         val zf = new ZipFile(p.toFile)
-        try {
-          var exts = Set.empty[String]
-          zf.entries().asIterator().forEachRemaining { e =>
-            exts += e.getName.replaceAll("^.*?(\\.[a-z.]+)$", "$1")
-            if (e.getName.endsWith(".tif") && e.getSize > 0) {
-              // non-empty clip → the payload is a decodable GeoTIFF
-              // whose pixels match the zipped .asc sidecar
-              val bytes = zf.getInputStream(e).readAllBytes()
-              val ascName = e.getName.stripSuffix(".tif") + ".asc"
-              val asc = graft.raster.AsciiGrid.parse(new String(
-                zf.getInputStream(zf.getEntry(ascName)).readAllBytes(), "UTF-8"))
-              val tif = graft.raster.GeoTiff.read(bytes)
-              assert(tif.srid == 2193)
-              assert(tif.grid.ncols == asc.ncols && tif.grid.nrows == asc.nrows)
-              assert(tif.grid.values.sameElements(asc.values),
-                s"pixel drift between zipped .tif and .asc in $p")
-              parsedTifs += 1
-            }
-          }
-          assert(exts == Set(".asc", ".wld", ".stats.txt", ".tif"),
-            s"entries in $p: $exts")
+        val entries = try {
+          zf.entries().asScala.map(e => e.getName -> zf.getInputStream(e).readAllBytes()).toMap
         } finally zf.close()
+        val exts = entries.keySet.map(_.replaceAll("^.*?(\\.[a-z.]+)$", "$1"))
+        assert(exts == Set(".asc", ".wld", ".stats.txt", ".tif"), s"entries in $p: $exts")
+        // the .wld and .tif are exactly what the zipped .asc derives to
+        val asc = AsciiGrid.parse(new String(entries(s"$stem.asc"), StandardCharsets.UTF_8))
+        val wld = new String(entries(s"$stem.wld"), StandardCharsets.UTF_8)
+        val tifBytes = entries(s"$stem.tif")
+        if (asc.ncols == 0 || asc.nrows == 0) {
+          assert(wld.isEmpty && tifBytes.isEmpty, s"empty clip with a payload in $p")
+          emptyClips += 1
+        } else {
+          assert(wld == s"${asc.cellsize}\n0.0\n0.0\n-${asc.cellsize}\n" +
+            s"${asc.centerX(0)}\n${asc.centerY(0)}\n", s"world file drift in $p")
+          assert(tifBytes.sameElements(GeoTiff.write(asc, srid = 2193)), s"GeoTIFF drift in $p")
+          // non-empty clip → the payload is a decodable GeoTIFF whose
+          // pixels match the zipped .asc sidecar
+          val tif = GeoTiff.read(tifBytes)
+          assert(tif.srid == 2193)
+          assert(tif.grid.ncols == asc.ncols && tif.grid.nrows == asc.nrows)
+          assert(tif.grid.values.sameElements(asc.values),
+            s"pixel drift between zipped .tif and .asc in $p")
+          parsedTifs += 1
+        }
       }
     }
     assert(zipCount == 48, s"expected 48 zips, got $zipCount")
-    assert(parsedTifs > 0, "no non-empty GeoTIFF payload was round-trip checked")
+    assert(parsedTifs == 45 && emptyClips == 3, s"$parsedTifs non-empty, $emptyClips empty clips")
   }
 
   test("source stage: asciigrid DSv2 scan, columns pruned, region scope pushed to listing") {
     val src = Pipeline.sourceFiles(spark, inputDir, srcRegion = Some("05"))
     val plan = src.queryExecution.executedPlan
-    // column pruning: the scan emits only (path, text) — cell values are
-    // never tokenized for the clip path
-    assert(plan.output.map(_.name) == Seq("path", "text"), s"plan:\n$plan")
     // the region-directory contains-predicate reaches the DSv2 listing
     // (pushed filter — directories outside the code never open); the
     // exact parent-dir equality stays as a residual row filter. The
@@ -160,6 +168,27 @@ class PipelineSpec extends SparkSpecBase {
     assert(pushed.exists(_.contains("/05/")),
       s"path scope should be pushed to the listing, got $pushed in:\n$p")
     assert(src.count() == 1, "only region 05's grid should be listed")
+
+    // the pipeline's own read: header columns plus the parsed cells,
+    // never the raw text the per-pair product would have to re-parse
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.run(spark, inputDir, regionsDf, s"$work/out-read-schema",
+        updatedAt = "2026-01-01T00:00:00Z", srcRegion = Some("05"))
+      val readSchema = "asciigrid scan, ReadSchema: (struct<[^>]*>+)".r
+      eventually(timeout(Span(30, Seconds))) {
+        val schemas = plans.asScala.flatMap(readSchema.findAllMatchIn(_).map(_.group(1))).toSet
+        assert(schemas == Set("struct<path:string,ncols:int,nrows:int,xllcorner:double," +
+          "yllcorner:double,cellsize:double,nodata:double,values:array<double>>"),
+          s"pipeline scans read: $schemas")
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("region-scoped run processes only that source directory") {

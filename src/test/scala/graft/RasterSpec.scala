@@ -92,8 +92,35 @@ class RasterSpec extends AnyFunSuite {
       "cellsize 10.0\nNODATA_value -9999\n1 2\n3 4\n"
     val g = AsciiGrid.parse(text)
     assert(g.xllcorner == 95.0 && g.yllcorner == 195.0, s"${g.xllcorner},${g.yllcorner}")
-    val h = AsciiGrid.parseHeader(text)
-    assert(h.xllcorner == 95.0 && h.yllcorner == 195.0, s"${h.xllcorner},${h.yllcorner}")
+  }
+
+  test("malformed headers are rejected naming the key; zero-size grids stay legal") {
+    val full = Seq("ncols 2", "nrows 1", "xllcorner 0", "yllcorner 0", "cellsize 1",
+      "NODATA_value -9999")
+    def parseWith(lines: Seq[String]) = AsciiGrid.parse(lines.mkString("\n") + "\n1 2\n")
+    Seq("ncols", "nrows", "xllcorner", "yllcorner", "cellsize").foreach { key =>
+      val e = intercept[IllegalArgumentException](
+        parseWith(full.filterNot(_.startsWith(key))))
+      assert(e.getMessage.contains(key), s"$key: ${e.getMessage}")
+    }
+    // the center forms are named too when neither convention is present
+    val noY = intercept[IllegalArgumentException](
+      parseWith(full.filterNot(_.startsWith("yll"))))
+    assert(noY.getMessage.contains("yllcenter"), noY.getMessage)
+    Seq("0", "-1", "NaN", "Infinity").foreach { cs =>
+      val e = intercept[IllegalArgumentException](
+        parseWith(full.map(l => if (l.startsWith("cellsize")) s"cellsize $cs" else l)))
+      assert(e.getMessage.contains("cellsize"), s"$cs: ${e.getMessage}")
+    }
+    Seq("ncols", "nrows").foreach { key =>
+      val e = intercept[IllegalArgumentException](
+        parseWith(full.map(l => if (l.startsWith(key)) s"$key -1" else l)))
+      assert(e.getMessage.contains(key), s"$key: ${e.getMessage}")
+    }
+    val empty = AsciiGrid.parse(AsciiGrid.write(
+      AsciiGrid(0, 0, 5.0, 6.0, 2.0, -9999.0, Array.empty)))
+    assert(empty.ncols == 0 && empty.nrows == 0 && empty.values.isEmpty)
+    assert(empty.xllcorner == 5.0 && empty.cellsize == 2.0)
   }
 
   test("VecSumAgg tolerates ragged vectors without truncation or crash") {

@@ -4,6 +4,8 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.BandJoin
+import graft.plans.BandJoin.Cap
 import graft.text.Corpus
 
 /** Deduplication operators for training-data pipelines, over the
@@ -160,108 +162,6 @@ object DedupQueries {
           concat(col("text"), lit(" zzz tail")).as("text")))
   }
 
-  /** LSH band self-join → DISTINCT candidate pairs, with the size-gated
-    * HOT-BAND-KEY occupancy cap ported from the fingerprint pack
-    * (VERDICT r19 #1; template MultimodalQueries.hammingBandPairs,
-    * r13): a band key shared by n docs contributes n(n−1)/2 candidate
-    * rows, so one degenerate key grows the join QUADRATICALLY in the
-    * hot key while contributing almost no verified pairs — and the
-    * text packs have a natural degenerate class: every doc whose
-    * shingle set is EMPTY (< 3 tokens) minhashes to the identical 4
-    * band keys (sig = "" per seed → bkey = md5("")), and identical
-    * boilerplate texts collide the same way. Above the size gate (or
-    * under a forced cap) band keys with occupancy > cap are dropped
-    * from BOTH sides via one anti-join against the bounded hot-key
-    * set; the drop-set size is logged (ADVICE r16 discipline) and the
-    * capped path's recall is a GATED number at the fixture and
-    * production caps (q_textband_recall / q_textband_recall_prod),
-    * never an assumption. Corpora at or below the gate keep the exact
-    * plain plan, so every pre-existing fixture oracle is unchanged.
-    *
-    * `gateRows` (the band-row count, ~4× docs) is consulted ONLY under
-    * [[MultimodalQueries.CapAuto]] with no conf override; callers pass
-    * the cheapest CACHED equivalent (the fingerprint pack's
-    * cache-precondition discipline — counting an uncached band frame
-    * would pay its kernel pipeline twice). `spark.graft.textband.cap`
-    * is the external override, mirroring `spark.graft.fpband.cap`;
-    * audits force caps explicitly and never thread them through
-    * session conf (ADVICE r17).
-    *
-    * Answer-preserving when capped? NO, by design — a true pair whose
-    * every shared band key is hot is lost (same trade as the
-    * fingerprint cap); what keeps it honest is the measured recall.
-    * The self-join's two sides stay canonically identical under the
-    * cap (one shared anti-join), so ReuseExchange still computes the
-    * banded side once for callers that rely on it (q_dedup_consensus).
-    */
-  private[graft] def bandSelfJoinCands(s: SparkSession, bands: DataFrame,
-      keyCols: Seq[String], gateRows: => Long,
-      cap: MultimodalQueries.BandCap = MultimodalQueries.CapAuto): DataFrame = {
-    val effCap: Option[Long] = cap match {
-      case MultimodalQueries.CapOff       => None
-      case MultimodalQueries.CapForced(n) => Some(n)
-      case MultimodalQueries.CapAuto =>
-        val capConf = s.conf.getOption("spark.graft.textband.cap").map(_.toLong)
-        if (capConf.isDefined) capConf
-        else if (gateRows <= 40000L) None // ≈10k docs × 4 bands
-        else Some(200L)
-    }
-    val kept = effCap match {
-      case None => bands
-      case Some(c) =>
-        // Occupancy via ONE window over the band key (optimization r20,
-        // guide §2.1): the original port materialized the hot-key set
-        // with an EAGER count() — a separate job that re-ran the whole
-        // banded kernel (mbands is deliberately uncached) and its
-        // shuffle just to log the drop-set size, doubling the capped
-        // route's kernel cost at every engaged scale (ProbePhases @10×:
-        // q_dedup_consensus build 3.19 s / exec 4.10 s, flat 10×≈20×;
-        // a pre-repartition + agg + anti-join variant was tried first
-        // and measured ZERO net — the optimizer strips the bare
-        // repartition, so the kernel still ran twice). The window's
-        // required distribution IS the self-join's: `count over
-        // partitionBy(key)` plans one exchange on the band key, the
-        // filter `occupancy ≤ cap` is map-side above it (row set
-        // identical to the anti-join: every row of a hot key dropped),
-        // and both self-join sides consume the identical subtree, so
-        // ReuseExchange/AQE stage reuse computes kernel + shuffle once;
-        // the window's key-sort even pre-satisfies the SMJ ordering.
-        // Degenerate-corpus note: a pathological key buffers its run in
-        // the window (ExternalAppendOnlyUnsafeRowArray — spills, never
-        // OOMs) before the filter drops it; linear in the hot key,
-        // unlike the quadratic join it prevents.
-        //
-        // no-silent-caps (ADVICE r16): the dropped-ROW count rides the
-        // query's own materialization via observe() (zero extra
-        // passes); a daemon thread waits for the first action and emits
-        // the log line. The recall audits (q_textband_recall*) remain
-        // the quantified pricing of the drop.
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCols.map(col): _*)
-        val obs = org.apache.spark.sql.Observation(
-          s"graft.textband.cap.${java.util.UUID.randomUUID()}")
-        val counted = bands
-          .withColumn("_n", count(lit(1)).over(w))
-          .observe(obs,
-            sum(when(col("_n") > c, 1L).otherwise(0L)).as("n_dropped"))
-        val t = new Thread(() =>
-          try {
-            val n = obs.get("n_dropped")
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"graft.textband: dropping $n hot-key band rows (cap=$c) " +
-                "from the LSH candidate self-join")
-          } catch { case _: InterruptedException => () })
-        t.setDaemon(true)
-        t.start()
-        counted.filter(col("_n") <= c).drop("_n")
-    }
-    kept.as("a").join(kept.as("b"),
-        keyCols.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-  }
-
   /** Shared body for the two q_textband_recall variants — the text-pack
     * mirror of MultimodalQueries.fpbandRecall (VERDICT r19 #1). Audit
     * corpus = the q_dedup_minhash sub-corpus PLUS a planted degenerate
@@ -269,7 +169,7 @@ object DedupQueries {
     * text, so the whole block shares the empty-set band keys md5("") —
     * the quadratic-in-disguise class the cap exists for: ~72 docs ≈
     * 2.5k junk candidates at sf0.01). Capped arm forced at `capAt`,
-    * truth arm genuinely uncapped ([[MultimodalQueries.CapOff]]); both
+    * truth arm genuinely uncapped ([[BandJoin.Cap.Off]]); both
     * verified by INTEGER cross-multiplication (2·∩ ≥ ∪ AND ∪ > 0 —
     * never the float jaccard: two empty sets give 0/0, which Spark
     * orders as NaN ≥ 0.5 = true while DuckDB yields NULL = false, so
@@ -312,10 +212,10 @@ object DedupQueries {
           size(array_union(col("sh_a"), col("sh_b"))) &&
           size(array_union(col("sh_a"), col("sh_b"))) > 0)
       .select(col("id_a"), col("id_b"))
-    val cappedCands = QueryCaches.cache(bandSelfJoinCands(s, bands,
-      Seq("band", "bkey"), 0L, MultimodalQueries.CapForced(capAt)))
-    val plainCands = QueryCaches.cache(bandSelfJoinCands(s, bands,
-      Seq("band", "bkey"), 0L, MultimodalQueries.CapOff))
+    val cappedCands = QueryCaches.cache(BandJoin.pairs(bands,
+      Seq("band", "bkey"), "doc_id", "minhash", Cap.Forced(capAt), 0L).distinct())
+    val plainCands = QueryCaches.cache(BandJoin.pairs(bands,
+      Seq("band", "bkey"), "doc_id", "minhash", Cap.Off, 0L).distinct())
     // The capped arm joins UNVERIFIED (optimization r20, guide §1.2
     // "don't compute things you throw away"): capping only DROPS band
     // keys, so cappedCands ⊆ plainCands, and for any pair already in
@@ -842,8 +742,8 @@ object DedupQueries {
       // below the gate (this fixture — oracle unchanged), occupancy cap
       // above it, recall gated by q_textband_recall/_prod. The gate
       // count reads the already-cached band frame.
-      val cands = bandSelfJoinCands(s, bands, Seq("band", "bkey"),
-        gateRows = bands.count())
+      val cands = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id",
+        "minhash", Cap.Auto, gateRows = bands.count()).distinct()
       val sets = docs.select(col("doc_id"), Corpus.shingles("text").as("sh"))
       cands
         .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -875,8 +775,8 @@ object DedupQueries {
           posexplode(bandKeys(s)).as(Seq("band", "bkey"))))
       // same size-gated capped construction as q_dedup_minhash (the
       // banding under audit must be the banding production runs)
-      val cands = QueryCaches.cache(bandSelfJoinCands(s, bands,
-        Seq("band", "bkey"), gateRows = bands.count()))
+      val cands = QueryCaches.cache(BandJoin.pairs(bands, Seq("band", "bkey"),
+        "doc_id", "minhash", Cap.Auto, gateRows = bands.count()).distinct())
       val planted = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id").as("id_a"),
@@ -949,8 +849,8 @@ object DedupQueries {
       // naturally as the corpus grows; the gate count reuses the
       // cached `words` frame (bands itself is a cheap uncached
       // posexplode, 4 rows per cached word row)
-      val cands = bandSelfJoinCands(s, bands, Seq("band", "bv"),
-        gateRows = words.count() * 4)
+      val cands = BandJoin.pairs(bands, Seq("band", "bv"), "doc_id",
+        "simhash", Cap.Auto, gateRows = words.count() * 4).distinct()
       cands
         .join(words.select(col("doc_id").as("id_a"), col("w").as("wa")), "id_a")
         .join(words.select(col("doc_id").as("id_b"), col("w").as("wb")), "id_b")
@@ -1011,7 +911,7 @@ object DedupQueries {
       // both capped band joins: mbands stays deliberately uncached
       // (r13 §8 — its self-join's sides are canonically identical, so
       // ReuseExchange computes the kernel once; a property the capped
-      // construction preserves, both sides sharing one anti-join), and
+      // construction preserves, both sides sharing one window), and
       // counting it directly would pay the minhash kernel an extra
       // full pass. words rows = consensus docs exactly.
       val words = QueryCaches.cache(docs
@@ -1022,8 +922,8 @@ object DedupQueries {
         .withColumn("sh", Corpus.shingles("text"))
         .select(col("doc_id"),
           posexplode(bandKeys(s)).as(Seq("band", "bkey")))
-      val mcands = bandSelfJoinCands(s, mbands, Seq("band", "bkey"),
-        gateRows = words.count() * 4)
+      val mcands = BandJoin.pairs(mbands, Seq("band", "bkey"), "doc_id",
+        "minhash", Cap.Auto, gateRows = words.count() * 4).distinct()
       val sets = docs.select(col("doc_id"), Corpus.shingles("text").as("sh"))
       val mh = mcands
         .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -1036,8 +936,8 @@ object DedupQueries {
       // (words cached above); same capped construction
       val sbands = words.select(col("doc_id"),
         posexplode(col("w")).as(Seq("band", "bv")))
-      val scands = bandSelfJoinCands(s, sbands, Seq("band", "bv"),
-        gateRows = words.count() * 4)
+      val scands = BandJoin.pairs(sbands, Seq("band", "bv"), "doc_id",
+        "simhash", Cap.Auto, gateRows = words.count() * 4).distinct()
       val sh = scands
         .join(words.select(col("doc_id").as("id_a"), col("w").as("wa")), "id_a")
         .join(words.select(col("doc_id").as("id_b"), col("w").as("wb")), "id_b")
@@ -1937,7 +1837,7 @@ object DedupQueries {
       // scale (sf0.1 1.87 s, 10x 2.24 s, 20x 2.06 s for 1x/10x/20x
       // doc counts; disp_frac2 0.0 on every run) — at these fixture
       // sizes the query is overhead-bound and its volumes were already
-      // proven exactly linear by ProbeContainment.
+      // proven exactly linear in r13 (docs/ROUND13_NOTES.md).
       // Shingles are hashed to 64-bit keys map-side right after the
       // explode (the q_span_dedup treatment, same collision bound —
       // a collision inflates one pair's |∩| by 1): the df aggregate
@@ -1945,7 +1845,7 @@ object DedupQueries {
       // excerpt-side broadcast ship 8-byte keys, and both CACHES hold
       // longs instead of ~30-byte strings — the cache-pressure scale
       // constant (2.5–3.2× per 2× rows, volumes proven linear by
-      // ProbeContainment) shrinks with the working set. Measured at
+      // ROUND13_NOTES) shrinks with the working set. Measured at
       // sf0.1, 5-pass mini-suite: min 1.45 → 1.28 s, median
       // 1.79 → 1.45 s.
       val baseShAll = QueryCaches.cache(docs

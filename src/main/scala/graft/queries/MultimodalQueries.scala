@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.MultimodalOps
+import graft.plans.BandJoin
+import graft.plans.BandJoin.Cap
 
 /** Multimodal-column queries: `documents.text` bytes stand in for
   * media blobs (binary column), with the decode stubbed
@@ -17,132 +19,45 @@ import graft.multimodal.MultimodalOps
   */
 object MultimodalQueries {
 
-  /** Shared Hamming-band near-dup pairing for 64-bit perceptual
-    * fingerprints (image aHash, audio energy-delta): 4×16-bit bands,
-    * candidates on any-band equality, verified at bit_count(xor) ≤ 6.
+  /** Hamming-band near-dup pairs for 64-bit perceptual fingerprints
+    * (image aHash, audio energy-delta): 4×16-bit bands, candidates on
+    * any-band equality through [[BandJoin]], verified at
+    * bit_count(xor) ≤ 6. Each pair carries both hashes through the
+    * join, so the verify needs no join back to `hashes`.
     *
-    * Scale posture (r16, adjudicated from the 20× full run): a 16-bit
-    * band domain admits the r13 degenerate-key quadratic — the AUDIO
-    * fingerprint's correlated energy-delta bits put linear-in-N
-    * occupancy into a few band values, measured 2.05 → 5.39 s in-suite
-    * (5.96 s isolated, 3-pass) for 2× rows at 10×→20× while the image
-    * and simhash siblings stayed ≤1.3×. Same remedy as nearDupPairs,
-    * size-gated: above 10k fingerprints, band keys with occupancy >
-    * 200 drop via an AQE-adaptive broadcast anti-join (the drop-set,
-    * never the keep-set). The r16 gate was 100k, which the r17 20×
-    * rerun proved never engages at the scale fixtures (33k fps) — the
-    * degenerate-key quadratic ran uncapped and measured 3.3× for 2×
-    * rows; 10k keeps every gate/bench fixture (≤2k fps) on the plain
-    * plan while the hot aggregate (one linear pass) guards everything
-    * larger. Documented trade (the r13 contract): a true near-dup
-    * pair whose EVERY shared band is hot is lost — at a hot 16-bit
-    * key almost all pairs are non-matches; q_fpband_recall gates the
-    * measured recall of the capped path every round (forced cap 25,
-    * fixture-scale), q_fpband_recall_prod gates the PRODUCTION cap
-    * 200 (VERDICT r17 #2 — the number users actually run), and the
-    * drop-set size is logged.
+    * A 16-bit band domain admits the degenerate-key quadratic: the
+    * audio fingerprint's correlated energy-delta bits put
+    * linear-in-N occupancy into a few band values (r16: 2.05 → 5.39 s
+    * for 2× rows at 10×→20× while the image and simhash siblings
+    * stayed ≤ 1.3×). [[BandJoin.Cap.Auto]] therefore caps hot keys
+    * above 10k fingerprints (40k band rows) — every gate/bench fixture
+    * (≤ 2k fingerprints) stays on the plain plan — and
+    * q_fpband_recall / q_fpband_recall_prod gate the recall of the
+    * capped path at cap 25 and at the production cap 200.
     *
-    * Cap selection is an EXPLICIT parameter (ADVICE r17): the recall
-    * audits build capped and uncapped variants of the same corpus in
-    * one session, and threading the forced cap through session conf
-    * made the truth arm silently take the default capped path above
-    * the size gate (measuring cap-25 vs cap-200 instead of vs plain)
-    * and raced any concurrent build in the same session.
-    * `spark.graft.fpband.cap` remains the EXTERNAL override only,
-    * consulted solely under [[CapAuto]].
-    *
-    * Cache precondition (VERDICT r17 #6): under [[CapAuto]] with no
-    * conf override the size gate runs an EAGER `hashes.count()` — an
-    * extra job per invocation that is only free because every caller
-    * caches `hashes` first (they all do: the fingerprint kernel feeds
-    * both the gate and the pair join). An uncached caller would pay
-    * the fingerprint pipeline twice; cache the input or pass an
-    * explicit cap.
+    * Cache precondition (VERDICT r17 #6): under Auto with no conf
+    * override the gate counts `hashes` eagerly, which is only free
+    * because every caller caches `hashes` first.
     */
-  private[graft] sealed trait BandCap
-  /** Size-gated default: conf override if set, else plain ≤10k fps, else cap 200. */
-  private[graft] case object CapAuto extends BandCap
-  /** Plain (uncapped) plan regardless of corpus size — the truth arm. */
-  private[graft] case object CapOff extends BandCap
-  /** Capped path forced at occupancy `n`, any corpus size. */
-  private[graft] final case class CapForced(n: Long) extends BandCap
-
-  private def hammingBandPairs(s: SparkSession, hashes: DataFrame,
-      cap: BandCap = CapAuto): DataFrame = {
-    val bandsRaw = hashes
+  private def hammingNearDups(hashes: DataFrame, cap: Cap): DataFrame = {
+    val bands = hashes
       .select(col("doc_id"), col("hash"),
         explode(expr("sequence(0, 3)")).as("band_idx"))
       .withColumn("band_val",
         expr("shiftrightunsigned(hash, band_idx * 16) & 65535"))
-    val effCap: Option[Long] = cap match {
-      case CapOff       => None
-      case CapForced(n) => Some(n)
-      case CapAuto =>
-        val capConf = s.conf.getOption("spark.graft.fpband.cap").map(_.toLong)
-        if (capConf.isDefined) capConf
-        else if (hashes.count() <= 10000L) None
-        else Some(200L)
-    }
-    val bands = effCap match {
-      case None => bandsRaw
-      case Some(c) =>
-        // Occupancy via one window over the band key (optimization r20,
-        // the DedupQueries.bandSelfJoinCands shape — see the measured
-        // rationale there): `count over partitionBy(band)` plans the
-        // single exchange the pair self-join needs anyway, the
-        // occupancy filter is map-side above it, and both join sides
-        // reuse the identical subtree. Row set identical to the
-        // previous hot-key anti-join: every row of a key with
-        // occupancy > cap is dropped. Replaces an EAGER hot-set
-        // count() job + anti-join that re-scanned the cached
-        // fingerprint frame and paid a second counting shuffle.
-        //
-        // ADVICE r16 (no silent caps): the cap is answer-changing, so
-        // the dropped-row count still gets logged — via observe()
-        // riding the query's own materialization, a daemon thread
-        // emitting the line after the first action; the recall audits
-        // (q_fpband_recall*) remain the quantified pricing.
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band_idx"), col("band_val"))
-        val obs = org.apache.spark.sql.Observation(
-          s"graft.fpband.cap.${java.util.UUID.randomUUID()}")
-        val counted = bandsRaw
-          .withColumn("_n", count(lit(1)).over(w))
-          .observe(obs,
-            sum(when(col("_n") > c, 1L).otherwise(0L)).as("n_dropped"))
-        val t = new Thread(() =>
-          try {
-            val n = obs.get("n_dropped")
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"graft.fpband: dropping $n hot-key band rows " +
-                s"(cap=$c) from the near-dup pair join")
-          } catch { case _: InterruptedException => () })
-        t.setDaemon(true)
-        t.start()
-        counted.filter(col("_n") <= c).drop("_n")
-    }
-    bandPairVerify(bands)
-  }
-
-  private def bandPairVerify(bands: DataFrame): DataFrame = {
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.hash").as("ha"), col("b.hash").as("hb"))
+    BandJoin.pairs(bands, Seq("band_idx", "band_val"), "doc_id", "fingerprint",
+        cap, gateRows = hashes.count() * 4, carry = Seq("hash"))
       .distinct() // OR-of-bands: multi-band agreement counts once
-    cand.withColumn("hamming", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
+      .withColumn("hamming", expr("CAST(bit_count(hash_a ^ hash_b) AS BIGINT)"))
       .filter(col("hamming") <= 6)
       .select(col("id_a"), col("id_b"), col("hamming"))
       .orderBy("id_a", "id_b")
   }
 
   /** Shared recall-audit body for the two q_fpband_recall variants:
-    * one fingerprint pass (cached — the hammingBandPairs cache
+    * one fingerprint pass (cached — the hammingNearDups cache
     * precondition), the capped path forced at `capAt`, the truth arm
-    * genuinely uncapped ([[CapOff]] — never the Auto default, which
+    * genuinely uncapped ([[Cap.Off]] — never the Auto default, which
     * above the size gate is itself cap-200), one left join + global
     * aggregate. Both caps are explicit parameters; session conf is
     * never touched, so a concurrent build in the same session can't
@@ -159,8 +74,8 @@ object MultimodalQueries {
            else Nil)
       blobs.iterator.map { case (d, blob) => MultimodalOps.audioFp64(d, blob) }
     }).toDF("doc_id", "hash"))
-    val capped = hammingBandPairs(s, hashes, CapForced(capAt))
-    val plain = hammingBandPairs(s, hashes, CapOff)
+    val capped = hammingNearDups(hashes, Cap.Forced(capAt))
+    val plain = hammingNearDups(hashes, Cap.Off)
     plain.select(col("id_a"), col("id_b"))
       .join(capped.select(col("id_a"), col("id_b"), lit(1L).as("found")),
         Seq("id_a", "id_b"), "left_outer")
@@ -290,7 +205,7 @@ object MultimodalQueries {
              else Nil)
         blobs.iterator.map { case (d, blob) => MultimodalOps.aHash64(d, blob) }
       }).toDF("doc_id", "hash"))
-      hammingBandPairs(s, hashes)
+      hammingNearDups(hashes, Cap.Auto)
     }),
 
     // Audio NEAR-DUP DEDUP — dedup brought to the audio column,
@@ -315,11 +230,11 @@ object MultimodalQueries {
              else Nil)
         blobs.iterator.map { case (d, blob) => MultimodalOps.audioFp64(d, blob) }
       }).toDF("doc_id", "hash"))
-      hammingBandPairs(s, hashes)
+      hammingNearDups(hashes, Cap.Auto)
     }),
 
     // RECALL AUDIT of the capped hot-band path (ADVICE r16 follow-up):
-    // the size-gated occupancy cap in hammingBandPairs is
+    // the size-gated occupancy cap in hammingNearDups is
     // answer-changing above the gate (a true pair whose EVERY shared
     // band is hot is dropped), and until now the recall trade was only
     // a log line. This query makes it a GATED NUMBER: the capped path

@@ -783,7 +783,7 @@ object RelationalQueries {
       // item at 2% support implies ≤ 50 such items) at ANY corpus
       // size, but its post-aggregate size ESTIMATE inherits the corpus
       // scan's, so the frequent-item semi-join plans (and under AQE
-      // stays — PlanProbe-verified: AQE only sees the small side after
+      // stays — verified on the executed plan: AQE only sees the small side after
       // the corpus side's item exchange has already materialized, at
       // which point DynamicJoinSelection rightly declines) a
       // SortMergeJoin that re-shuffles and sorts the corpus-sized
@@ -797,17 +797,11 @@ object RelationalQueries {
       // fixture scale), so fixture oracles keep the measured-faster
       // plain plan — the q_cdc_chunk_dedup bigCorpus routing pattern,
       // plan-pinned via spark.graft.freqitems.forceBroadcast.
-      // gate reads FS metadata (the statePartitions precedent), not a
-      // count job: ~1 GiB of basket-item input is where the exchange
-      // the hint removes stops being fixture-trivial
-      val bigCorpus = s.conf.getOption("spark.graft.freqitems.forceBroadcast")
-        .contains("true") || {
-          try {
-            val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-            p.getFileSystem(s.sparkContext.hadoopConfiguration)
-              .getContentSummary(p).getLength > (1L << 30)
-          } catch { case _: Throwable => false }
-        }
+      // ScaleGate reads FS metadata, not a count job: ~1 GiB of
+      // basket-item input is where the exchange the hint removes stops
+      // being fixture-trivial
+      val bigCorpus = ScaleGate.route(s, "spark.graft.freqitems.forceBroadcast",
+        "true", "false", s"$dir/lineitem.parquet")
       def maybeBcast(df: DataFrame): DataFrame =
         if (bigCorpus) broadcast(df) else df
       val fb = bi.join(maybeBcast(freq.select("item")), Seq("item"), "left_semi")

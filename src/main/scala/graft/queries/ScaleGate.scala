@@ -1,13 +1,17 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
-/** Size-gated shape routing (optimization r21) — the shared form of the
-  * gate three earlier adoptions hand-rolled: `q_cdc_chunk_dedup`'s
-  * bigCorpus cap route, `q_freq_itemsets`'
-  * `spark.graft.freqitems.forceBroadcast` broadcast route (both read FS
-  * metadata, never a count job — the statePartitions precedent), and
-  * the band-cap engagement threshold.
+/** Size-gated shape routing (optimization r21): the one filesystem-size
+  * gate. Used by `q_ntile_window`'s banded-rank route,
+  * `q_pack_sequences`' chunked-prefix-sum route and `q_freq_itemsets`'
+  * `spark.graft.freqitems.forceBroadcast` broadcast route — each reads
+  * FS metadata, never a count job (the statePartitions precedent).
+  * Other gates are not converted yet: `q_cdc_chunk_dedup`'s bigCorpus
+  * route still runs a `count()` job over the documents, and the
+  * band-cap gates count cached band frames (graft.plans.BandJoin).
   *
   * Why a gate instead of adopting the scale shape unconditionally: the
   * scale shapes this round adds (banded per-group ranks, chunked
@@ -23,13 +27,19 @@ import org.apache.spark.sql.SparkSession
   * The byte threshold is the same 1 GiB the freq-itemsets gate uses:
   * the point where a single window partition (corpus / #groups with
   * single-digit groups) stops being one comfortable in-memory sort.
+  * `getContentSummary` is a full recursive listing of the path, so on
+  * an object store holding many files the gate itself costs many LIST
+  * requests.
   */
 object ScaleGate {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** True = take the scale route. `confKey` may force either arm
     * (`scaleValue` / `fixtureValue`); any other (or absent) value
     * auto-routes on the input path's filesystem length — metadata only,
-    * no job, no I/O beyond a listing.
+    * no job, no I/O beyond a listing. A listing that fails takes the
+    * fixture route and logs a warning naming the key, path and error.
     */
   def route(s: SparkSession, confKey: String, scaleValue: String,
             fixtureValue: String, path: String,
@@ -42,6 +52,11 @@ object ScaleGate {
           val p = new org.apache.hadoop.fs.Path(path)
           p.getFileSystem(s.sparkContext.hadoopConfiguration)
             .getContentSummary(p).getLength > bytes
-        } catch { case _: Throwable => false }
+        } catch {
+          case NonFatal(e) =>
+            log.warn(s"$confKey: could not size $path ($e); " +
+              "taking the fixture route")
+            false
+        }
     }
 }

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.BandJoin
+import graft.plans.BandJoin.Cap
 
 /** Similarity search over the `embeddings` fixture (64-dim float
   * vectors).
@@ -55,7 +57,8 @@ object SimilarityQueries {
   /** Per-band-key occupancy cap for the near-dup LSH blocking — the
     * posting-list-cap discipline (q_passage_overlap's df ≤ 50) applied
     * to embedding space. Motivation is measured, not theoretical (r13
-    * ProbeBands at the synthetic 10×/20× fixtures): this corpus's
+    * band-volume probe at the synthetic 10×/20× fixtures,
+    * docs/ROUND13_NOTES.md): this corpus's
     * vectors live in a positive-ish orthant, so many share hyperplane
     * sign patterns and a few DEGENERATE band keys grow linearly with
     * the corpus (max occupancy 64 → 663 → 1351 at 1×/10×/20×) — their
@@ -91,54 +94,40 @@ object SimilarityQueries {
   private[graft] val SmallCorpusCutoff: Long = BandKeyCap * 20L
 
   /** Verified near-duplicate pairs over a (vec_id, embedding, nrm)
-    * corpus, by size regime (gate: [[SmallCorpusCutoff]]). Small
-    * corpus: plain banded-LSH candidates (skinny exploded key table,
-    * equi-join on the (band_idx, band_val) pair, OR-of-bands dedup).
-    * Large corpus: the same blocking with per-key occupancy ≤
-    * [[BandKeyCap]] — hot keys are the containment drop-set shape
-    * (the degenerate head is tiny, broadcasts AQE-adaptively, both
-    * explode streams filtered map-side) — UNIONED with an
-    * exact-equality pass (hash-shuffle on the vector bytes, linear at
-    * any scale, immune to the cap). Either way candidates re-join the
-    * corpus by id for the exact-cosine ≥ 0.99 verify; returns
+    * corpus, by size regime (gate: [[SmallCorpusCutoff]]). Candidates
+    * are the banded-LSH pairs of [[graft.plans.BandJoin]] over a skinny
+    * exploded (vec_id, band_idx, band_val) table: plain at or below the
+    * gate, capped at occupancy [[BandKeyCap]] above it and then UNIONED
+    * with an exact-equality pass (hash-shuffle on the vector bytes,
+    * linear at any scale, immune to the cap). This route keeps its own
+    * gate and cap — the oracle SQL encodes both — and never reads the
+    * band cap conf key. Either way the de-duplicated candidates re-join
+    * the corpus by id for the exact-cosine ≥ 0.99 verify; returns
     * (id_a, id_b, sim) with id_a < id_b.
+    *
+    * Both routes stay UNCACHED (§8 lens): the self-join's two sides
+    * canonicalize identically, so one exchange runs the 64-hyperplane
+    * kernel once and ReuseExchange hands it to the other side (the
+    * occupancy window plans that same exchange); a cache only added a
+    * barrier (removal measured parity, 0.885 → 0.875 s minima).
     */
-  private def nearDupPairs(corpus: DataFrame): DataFrame = {
+  private[graft] def nearDupPairs(corpus: DataFrame): DataFrame = {
     // the gate count is cheap next to the kernel work and populates
     // the caller's corpus cache it would materialize anyway
     val capped = corpus.count() > SmallCorpusCutoff
-    val bandsRaw = corpus.select(col("vec_id"),
+    val bands = corpus.select(col("vec_id"),
       posexplode(expr("vec_bands(embedding)")).as(Seq("band_idx", "band_val")))
-    def selfJoin(t: DataFrame): DataFrame = t.as("a")
-      .join(t.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
+    val lsh = BandJoin.pairs(bands, Seq("band_idx", "band_val"), "vec_id",
+      "embedding", if (capped) Cap.Forced(BandKeyCap) else Cap.Off, 0L)
     val cand =
-      if (!capped) {
-        // UNCACHED on this path (§8 lens): both self-join sides
-        // canonicalize identically, one exchange runs the
-        // 64-hyperplane kernel once and ReuseExchange hands it to the
-        // other side — a cache only added a barrier (removal measured
-        // parity, 0.885 → 0.875 s minima)
-        selfJoin(bandsRaw).distinct()
-      } else {
-        // CACHED on this path — the same §8 lens, other verdict: the
-        // key-count aggregate is a second consumer needing a DIFFERENT
-        // exchange, so uncached the kernel would run twice
-        val bands = QueryCaches.cache(bandsRaw)
-        val hot = bands.groupBy("band_idx", "band_val")
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > BandKeyCap)
-          .select("band_idx", "band_val")
-        val kept = bands.join(hot, Seq("band_idx", "band_val"), "left_anti")
+      if (!capped) lsh.distinct()
+      else {
         val exact = corpus
           .select(col("vec_id").as("id_a"), col("embedding").as("e1"))
           .join(corpus.select(col("vec_id").as("id_b"), col("embedding").as("e2")),
             col("e1") === col("e2") && col("id_a") < col("id_b"))
           .select("id_a", "id_b")
-        selfJoin(kept).unionByName(exact)
+        lsh.unionByName(exact)
           .distinct() // OR-of-bands + exact pass: any pair counts once
       }
     cand

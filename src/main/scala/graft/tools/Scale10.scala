@@ -145,7 +145,7 @@ object Scale10 {
     // collided in LSH bands SYSTEMATICALLY instead of randomly:
     // measured at the 10× fixture, 7.9M candidate pairs where the
     // uncorrelated-copy model predicts ~0.77M (≈90% cross-copy), and
-    // 4.0× pair growth per 2× rows at 20× (ProbeBands). Composing the
+    // 4.0× pair growth per 2× rows at 20× (ROUND13_NOTES). Composing the
     // rotation with a per-copy seeded sign-flip vector keeps the
     // transform an exact isometry (a signed permutation is orthogonal,
     // so within-copy cosine geometry and cluster truth are untouched)

@@ -236,12 +236,12 @@ class Round16OpsSpec extends SparkSpecBase {
     import graft.queries.MultimodalQueries
     val plain = MultimodalQueries.queries("q_audio_fp_dedup")(spark, sf)
       .collect().map(_.toString).toSet
-    withConf("spark.graft.fpband.cap" -> "1000000") {
+    withConf("spark.graft.band.cap" -> "1000000") {
       val loose = MultimodalQueries.queries("q_audio_fp_dedup")(spark, sf)
         .collect().map(_.toString).toSet
       assert(loose == plain, "a never-hot cap must not change the answer")
     }
-    withConf("spark.graft.fpband.cap" -> "1") {
+    withConf("spark.graft.band.cap" -> "1") {
       val tight = MultimodalQueries.queries("q_audio_fp_dedup")(spark, sf)
         .collect().map(_.toString).toSet
       assert(tight.subsetOf(plain),

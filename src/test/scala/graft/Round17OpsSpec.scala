@@ -7,14 +7,14 @@ class Round17OpsSpec extends SparkSpecBase {
 
   test("fpband recall: found pairs are a subset of truth and the forced cap " +
       "is restored after the build") {
-    val before = spark.conf.getOption("spark.graft.fpband.cap")
+    val before = spark.conf.getOption("spark.graft.band.cap")
     val row =
       try MultimodalQueries.queries("q_fpband_recall")(spark, sf).head()
       finally graft.queries.QueryCaches.releaseAll(spark)
     // the query sets the cap conf internally; it must restore the
     // session state (shared across every later suite)
-    assert(spark.conf.getOption("spark.graft.fpband.cap") == before,
-      "q_fpband_recall leaked spark.graft.fpband.cap into the session")
+    assert(spark.conf.getOption("spark.graft.band.cap") == before,
+      "q_fpband_recall leaked spark.graft.band.cap into the session")
     val nTrue = row.getAs[Long]("n_true_pairs")
     val nFound = row.getAs[Long]("n_found")
     val recall = row.getAs[Long]("recall_pm")

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{DedupQueries, MultimodalQueries, TextQueries}
+import graft.plans.BandJoin
+import graft.plans.BandJoin.Cap
+import graft.queries.{DedupQueries, TextQueries}
 
 /** Independent references for the round-20 work: the size-gated
   * hot-band-key occupancy cap on the text LSH band self-joins
@@ -35,20 +37,20 @@ class Round20OpsSpec extends SparkSpecBase {
   test("degenerate block (shared band key) is dropped by the forced cap; " +
     "true twin pair survives; capped candidates are a subset of plain") {
     val bands = degenerateBands(degN = 250)
-    val capped = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bkey"), 0L, MultimodalQueries.CapForced(25L))
+    val capped = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+      Cap.Forced(25L), 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped === Set((100000L, 100001L)),
       "capped candidates must be exactly the twin pair")
-    val plain = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bkey"), 0L, MultimodalQueries.CapOff)
+    val plain = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+      Cap.Off, 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(plain.size === 250 * 249 / 2 + 1,
       "uncapped join is quadratic in the degenerate block")
     assert(capped.subsetOf(plain))
     // a cap above the block's occupancy drops nothing
-    val loose = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bkey"), 0L, MultimodalQueries.CapForced(250L))
+    val loose = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+      Cap.Forced(250L), 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(loose === plain)
   }
@@ -62,32 +64,32 @@ class Round20OpsSpec extends SparkSpecBase {
       .select(col("doc_id"), explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("bv", col("band") + 1000L)
     val bands = deg.unionByName(twins)
-    val capped = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bv"), 0L, MultimodalQueries.CapForced(10L))
+    val capped = BandJoin.pairs(bands, Seq("band", "bv"), "doc_id", "simhash",
+      Cap.Forced(10L), 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped === Set((500L, 501L)))
   }
 
-  test("CapAuto honors the size gate, the default production cap, and the " +
-    "spark.graft.textband.cap conf override") {
+  test("Cap.Auto honors the size gate, the default production cap, and the " +
+    "spark.graft.band.cap conf override") {
     val bands = degenerateBands(degN = 250)
-    val plain = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bkey"), 0L, MultimodalQueries.CapOff)
+    val plain = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+      Cap.Off, 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // below the gate: plain plan, answers identical
-    val below = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bkey"), gateRows = 40000L, MultimodalQueries.CapAuto)
+    val below = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+      Cap.Auto, gateRows = 40000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(below === plain)
     // above the gate: default cap 200 < block occupancy 250 → block drops
-    val above = DedupQueries.bandSelfJoinCands(spark, bands,
-      Seq("band", "bkey"), gateRows = 40001L, MultimodalQueries.CapAuto)
+    val above = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+      Cap.Auto, gateRows = 40001L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(above === Set((100000L, 100001L)))
     // conf override wins regardless of the gate count
-    withConf("spark.graft.textband.cap" -> "25") {
-      val conf = DedupQueries.bandSelfJoinCands(spark, bands,
-        Seq("band", "bkey"), gateRows = 0L, MultimodalQueries.CapAuto)
+    withConf("spark.graft.band.cap" -> "25") {
+      val conf = BandJoin.pairs(bands, Seq("band", "bkey"), "doc_id", "minhash",
+        Cap.Auto, gateRows = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(conf === Set((100000L, 100001L)))
     }

@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
-# Builder-side pre-flight: execute EVERY declared SparkEntry query once at
-# sf0.001 in strict mode. Any query throw or fixture-contract violation
-# fails this script — run it before committing so the driver can never see
-# an erroring pack (round 8: a silent fixture-schema drift zeroed 31
-# queries; this catches that class of failure in one named place).
+# Pre-commit check: execute EVERY declared SparkEntry query once at
+# sf0.001 in strict mode, then compare every result with the DuckDB
+# oracle (tools/check_oracle.py). Any query throw, fixture-contract
+# violation or oracle mismatch fails this script — run it before
+# committing (round 8: a silent fixture-schema drift zeroed 31 queries;
+# this catches that class of failure in one named place).
 #
 # Usage: tools/preflight.sh [sfDir]   (default /root/testdata/sf0.001)
 set -euo pipefail
@@ -12,4 +13,5 @@ SF="${1:-/root/testdata/sf0.001}"
 OUT="$(mktemp -d /tmp/graft_preflight.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
 SPARK_GRAFT_STRICT=1 sbt -batch "runMain graft.Verify $SF $OUT"
-echo "preflight OK: all declared queries executed without error at $SF"
+python3 tools/check_oracle.py "$SF" "$OUT"
+echo "preflight OK: all declared queries executed and match the oracle at $SF"

@@ -1,11 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.geo.Jts
 import graft.raster.{AsciiGrid, GeoTiff, RasterOps}
-import graft.sinks.ZipSink
+import graft.sinks.{S3Sink, ZipSink}
 
 /** The composed end-to-end pipeline (SURVEY.md §3 lifecycle): the
   * reference's serial nested loops (ETL.py:229–366) as one declarative
@@ -20,7 +23,7 @@ import graft.sinks.ZipSink
   *  → one product per pair: clip + stats,        OP-SP-3, AGG-2
   *    .asc / .wld / .tif from the one clip
   *  → metadata doc                               D5
-  *  → zip sink + json sink + catalog             SNK-3/4
+  *  → one zip + json sink pass, catalog          SNK-3/4
   * }}}
   *
   * Anti-optimizations of the reference eliminated by construction
@@ -101,7 +104,7 @@ object Pipeline {
     // usable, all outputs stream straight to the object store; otherwise
     // degrade to the local root (the reference's missing-boto3 path,
     // ETL.py:77–92) with a logged warning.
-    val sinkRoot = graft.sinks.S3Sink.resolveRoot(spark, outDir)
+    val sinkRoot = S3Sink.resolveRoot(spark, outDir)
 
     // SRC-1/5: the asciigrid DataSource V2 — recursive .asc listing with
     // the suffix filter applied in the listing itself, one grid per row.
@@ -183,7 +186,7 @@ object Pipeline {
       approx_count_distinct(col("base_name")).as("n_source_files"),
       approx_count_distinct(col("region_code")).as("n_regions"))
 
-    // the three consumers below (catalog, zips, docs) share one
+    // the two consumers below (zip + json sink pass, catalog) share one
     // materialization of the expensive clip and product work; released in
     // the finally so repeated runs in a shared session don't leak blocks
     observed.persist()
@@ -198,9 +201,12 @@ object Pipeline {
       col("cl._1").as("clipped_text"), col("stats_text"), col("metadata_json"),
       col("file_stem"))
 
-    // SNK-3: zip of sidecar group (clipped raster + world file + stats).
-    val zips = observed.select(
-      concat(col("file_stem"), lit(".zip")).as("zip_name"),
+    // SNK-3 + SNK-4: one pass writes each product's zip (clipped raster +
+    // world file + stats) and its metadata .json with one filesystem
+    // handle, partition-side through the Hadoop FileSystem API (same
+    // writer for file:// and s3a:// roots; executors rebuild the handle
+    // from shipped fs.* conf).
+    val products = observed.select(col("file_stem"), col("metadata_json"),
       array(
         struct(concat(col("file_stem"), lit(".asc")).as("name"), col("cl._1").as("content")),
         struct(concat(col("file_stem"), lit(".wld")).as("name"), col("cl._9").as("content")),
@@ -209,21 +215,16 @@ object Pipeline {
       array(
         struct(concat(col("file_stem"), lit(".tif")).as("name"), col("cl._10").as("content")),
       ).as("bin_entries"))
-    ZipSink.write(zips, s"$sinkRoot/zipped")
-
-    // SNK-4: one metadata .json per product, written partition-side
-    // through the Hadoop FileSystem API (same writer for file:// and
-    // s3a:// roots; executors rebuild the handle from shipped fs.* conf).
-    val docs = observed.select(col("file_stem"), col("metadata_json"))
-    val docDir = s"$sinkRoot/zipped"
-    val fsConf = graft.sinks.S3Sink.fsConfEntries(spark)
-    docs.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      import java.nio.charset.StandardCharsets
-      import org.apache.hadoop.fs.Path
-      val fs = graft.sinks.S3Sink.fileSystemFor(docDir, fsConf)
-      fs.mkdirs(new Path(docDir))
+    val zipDir = s"$sinkRoot/zipped"
+    val fsConf = S3Sink.fsConfEntries(spark)
+    S3Sink.fileSystemFor(zipDir, fsConf).mkdirs(new Path(zipDir))
+    products.foreachPartition { rows: Iterator[Row] =>
+      val fs = S3Sink.fileSystemFor(zipDir, fsConf)
       rows.foreach { r =>
-        val out = fs.create(new Path(docDir, r.getAs[String]("file_stem") + ".json"), true)
+        val stem = r.getAs[String]("file_stem")
+        ZipSink.write(fs, new Path(zipDir, stem + ".zip"),
+          r.getAs[collection.Seq[Row]]("entries"), r.getAs[collection.Seq[Row]]("bin_entries"))
+        val out = fs.create(new Path(zipDir, stem + ".json"), true)
         try out.write(r.getAs[String]("metadata_json").getBytes(StandardCharsets.UTF_8))
         finally out.close()
       }

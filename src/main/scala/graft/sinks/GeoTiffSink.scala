@@ -9,9 +9,9 @@ import graft.raster.{AsciiGrid, GeoTiff}
 
 /** GeoTIFF file sink (SNK-1; ETL.py:259–262): one `.tif` per row,
   * encoded executor-side by the pure-JVM writer — same
-  * foreachPartition + Hadoop-FileSystem shape as ZipSink, so the same
-  * code streams to file://, hdfs://, or s3a:// roots with no driver
-  * collection.
+  * foreachPartition + Hadoop-FileSystem shape as the pipeline's zip and
+  * json sink pass, so the same code streams to file://, hdfs://, or
+  * s3a:// roots with no driver collection.
   */
 object GeoTiffSink {
 

@@ -4,53 +4,42 @@ import java.io.BufferedOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.Row
 
 /** Zip packaging sink (SNK-3; ETL.py:315–346): one .zip per group,
   * entries = the group's sidecar files, lockfiles excluded upstream
   * (PRJ-5 — the *grouping* is a query, see EtlQueries.q_zip_group; this
-  * module is only the I/O).
+  * module is only the packaging).
   *
-  * Executed with `foreachPartition` semantics: every partition writes
-  * its own groups, no driver collection — per-group single-file output
-  * is inherently a sink-side concern (SURVEY.md §7.6.5). I/O goes
-  * through the Hadoop FileSystem API, so the same writer streams to
-  * file://, hdfs://, or s3a:// roots (SNK-5) — the executor-side
-  * filesystem handle is rebuilt from the driver's `fs.*` conf entries.
+  * Called from a partition-side writer (the pipeline's one sink pass
+  * writes each product's zip and json doc with one handle): no driver
+  * collection — per-group single-file output is inherently a sink-side
+  * concern (SURVEY.md §7.6.5). I/O goes through the Hadoop FileSystem
+  * API, so the same writer streams to file://, hdfs://, or s3a://
+  * roots (SNK-5).
   */
 object ZipSink {
 
-  /** Expects schema: zip_name STRING, entries ARRAY<STRUCT<name STRING,
-    * content STRING>>, and optionally bin_entries ARRAY<STRUCT<name
-    * STRING, content BINARY>> for non-text sidecars (the clipped
-    * GeoTIFF itself, ETL.py:315–346 zips the .tif alongside its text
-    * sidecars). Writes `outDir/<zip_name>` files.
+  /** Writes one zip at `path`: `entries` are STRUCT<name STRING,
+    * content STRING> text sidecars, then `binEntries` STRUCT<name
+    * STRING, content BINARY> non-text ones (the clipped GeoTIFF itself,
+    * ETL.py:315–346 zips the .tif alongside its text sidecars).
     */
-  def write(df: DataFrame, outDir: String): Unit = {
-    val fsConf = S3Sink.fsConfEntries(df.sparkSession)
-    S3Sink.fileSystemFor(outDir, fsConf).mkdirs(new Path(outDir))
-    val hasBin = df.columns.contains("bin_entries")
-    df.foreachPartition { rows: Iterator[Row] =>
-      val fs = S3Sink.fileSystemFor(outDir, fsConf)
-      rows.foreach { row =>
-        val zipName = row.getAs[String]("zip_name")
-        val entries = row.getAs[collection.Seq[Row]]("entries")
-        val out = new ZipOutputStream(new BufferedOutputStream(
-          fs.create(new Path(outDir, zipName), true)))
-        try {
-          entries.foreach { e =>
-            out.putNextEntry(new ZipEntry(e.getAs[String]("name")))
-            out.write(e.getAs[String]("content").getBytes(StandardCharsets.UTF_8))
-            out.closeEntry()
-          }
-          if (hasBin) row.getAs[collection.Seq[Row]]("bin_entries").foreach { e =>
-            out.putNextEntry(new ZipEntry(e.getAs[String]("name")))
-            out.write(e.getAs[Array[Byte]]("content"))
-            out.closeEntry()
-          }
-        } finally out.close()
+  def write(fs: FileSystem, path: Path, entries: collection.Seq[Row],
+      binEntries: collection.Seq[Row]): Unit = {
+    val out = new ZipOutputStream(new BufferedOutputStream(fs.create(path, true)))
+    try {
+      entries.foreach { e =>
+        out.putNextEntry(new ZipEntry(e.getAs[String]("name")))
+        out.write(e.getAs[String]("content").getBytes(StandardCharsets.UTF_8))
+        out.closeEntry()
       }
-    }
+      binEntries.foreach { e =>
+        out.putNextEntry(new ZipEntry(e.getAs[String]("name")))
+        out.write(e.getAs[Array[Byte]]("content"))
+        out.closeEntry()
+      }
+    } finally out.close()
   }
 }

@@ -6,6 +6,8 @@ import java.util.zip.ZipFile
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -152,6 +154,56 @@ class PipelineSpec extends SparkSpecBase {
     }
     assert(zipCount == 48, s"expected 48 zips, got $zipCount")
     assert(parsedTifs == 45 && emptyClips == 3, s"$parsedTifs non-empty, $emptyClips empty clips")
+  }
+
+  test("one foreachPartition job writes every product's zip and json") {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val group = s"graft-sink-pass-${java.util.UUID.randomUUID()}"
+    // AQE builds the persisted frame in a job of its own under the first
+    // action's call site; that job's final RDD is the cached one and it
+    // writes nothing, so it is not counted as a sink job
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) {
+          val result = e.stageInfos.maxBy(_.stageId)
+          if (!result.rddInfos.maxBy(_.id).storageLevel.isValid)
+            sites.add(e.properties.getProperty("callSite.short", result.name))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = s"$work/out-sink-pass"
+    val stems = try {
+      spark.sparkContext.setJobGroup(group, "sink pass")
+      val stems = Pipeline.run(spark, inputDir, regionsDf, out, updatedAt = "2026-01-01T00:00:00Z")
+        .catalog.select("file_stem").collect().map(_.getString(0)).toSet
+      eventually(timeout(Span(30, Seconds))) {
+        assert(sites.asScala.exists(_.startsWith("parquet at")), s"jobs seen: $sites")
+      }
+      stems
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val writers = sites.asScala.filter(_.startsWith("foreachPartition"))
+    assert(writers.size == 1, s"sink jobs in one run: $writers (all jobs: $sites)")
+    val written = Files.list(Paths.get(out, "zipped")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    assert(stems.size == 48)
+    assert(written == stems.flatMap(s => Set(s"$s.zip", s"$s.json")))
+  }
+
+  test("zip and json files get the local filesystem's permission bits") {
+    result.catalog.count()
+    val probe = Files.createTempDirectory("graft-perm-probe").resolve("probe")
+    val o = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .create(new Path(s"file:$probe"), true)
+    o.close()
+    val expected = Files.getPosixFilePermissions(probe)
+    val files = Files.list(Paths.get(s"$work/out/zipped")).iterator().asScala.toSeq
+    assert(files.size == 96)
+    files.foreach { p =>
+      assert(Files.getPosixFilePermissions(p) == expected, s"permissions of $p")
+    }
   }
 
   test("source stage: asciigrid DSv2 scan, columns pruned, region scope pushed to listing") {

@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 import graft.sinks.S3Sink
 
 /** SNK-5/6: sink target resolution — enabled routes to the configured
@@ -91,5 +97,48 @@ class S3SinkSpec extends SparkSpecBase {
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$work/ignored-local/catalog.parquet")))
     }
+  }
+
+  private def perms(p: java.nio.file.Path): String =
+    PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  private def put(fs: FileSystem, p: java.nio.file.Path, text: String): Unit = {
+    val out = fs.create(new Path(s"file:$p"), true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  test("a local sink file gets the permission bits of the session's cached LocalFileSystem") {
+    val dir = Files.createTempDirectory("graft-sink-perms")
+    put(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration), dir.resolve("session.txt"), "x")
+    put(S3Sink.fileSystemFor(s"file:$dir", S3Sink.fsConfEntries(spark)), dir.resolve("sink.txt"), "x")
+    assert(perms(dir.resolve("sink.txt")) == perms(dir.resolve("session.txt")))
+    assert(perms(dir.resolve("sink.txt")) == "rw-r--r--")
+  }
+
+  test("the shipped fs.permissions.umask-mode applies to local sink files") {
+    val dir = Files.createTempDirectory("graft-sink-umask")
+    val fs = S3Sink.fileSystemFor(s"file:$dir",
+      S3Sink.fsConfEntries(spark) + ("fs.permissions.umask-mode" -> "077"))
+    put(fs, dir.resolve("private.txt"), "x")
+    assert(perms(dir.resolve("private.txt")) == "rw-------")
+  }
+
+  test("create with overwrite replaces an existing local file's bytes") {
+    val dir = Files.createTempDirectory("graft-sink-overwrite")
+    val fs = S3Sink.fileSystemFor(s"file:$dir", S3Sink.fsConfEntries(spark))
+    put(fs, dir.resolve("doc.json"), "a longer first version")
+    put(fs, dir.resolve("doc.json"), "v2")
+    assert(Files.readString(dir.resolve("doc.json")) == "v2")
+  }
+
+  test("equal shipped entries share one local handle; other schemes keep their own") {
+    val entries = S3Sink.fsConfEntries(spark)
+    val a = S3Sink.fileSystemFor("file:/tmp/graft-a", entries)
+    assert(S3Sink.fileSystemFor("/tmp/graft-b", entries.toList.toMap) eq a)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.mock-s3.impl", classOf[MockS3FileSystem].getName)
+    try assert(S3Sink.fileSystemFor("mock-s3:///tmp/graft-c", S3Sink.fsConfEntries(spark))
+      .isInstanceOf[MockS3FileSystem])
+    finally hc.unset("fs.mock-s3.impl")
   }
 }

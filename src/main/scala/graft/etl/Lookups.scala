@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** The reference's three code→name decode dictionaries, re-expressed as
   * dimension tables (SURVEY.md §1.1 D3; reference ETL.py:120–181).
@@ -97,6 +98,48 @@ object Lookups {
   def periodDim(spark: SparkSession): DataFrame    = dim(spark, periods)
   def parameterDim(spark: SparkSession): DataFrame = dim(spark, parameters)
   def regionDim(spark: SparkSession): DataFrame    = dim(spark, regions)
+
+  /** Region code of the Chatham Islands (ETL.py:181). */
+  val ChathamIslands = "99"
+
+  /** PRJ-3: every region but the Chatham Islands is clipped
+    * (ETL.py:272–273).
+    */
+  def clipped(regionCode: Column): Column = regionCode =!= ChathamIslands
+
+  private def regionKeyed(regions: DataFrame, extra: Seq[Column]): DataFrame =
+    broadcast(regions.select(
+      extra ++ Seq(col("code").as("region_code"), col("name").as("region_name")): _*))
+
+  /** Region code → name, keyed for a broadcast join on `region_code`
+    * (ETL.py:275).
+    */
+  def regionNames(spark: SparkSession): DataFrame = regionKeyed(regionDim(spark), Nil)
+
+  /** JOIN-1's region side: the clipped regions of a `code, name, …` dim
+    * as the `extra` columns followed by `region_code`, `region_name`,
+    * broadcast.
+    */
+  def clipRegions(regions: DataFrame, extra: Column*): DataFrame =
+    regionKeyed(regions.filter(clipped(col("code"))), extra)
+
+  /** A region's raw title as the feature layer spells it (ETL.py:276–279
+    * reads it back): "<name, dashes as spaces> Region", and
+    * "Area Outside Region" for the Chatham Islands.
+    */
+  def rawTitle(code: Column, name: Column): Column =
+    when(code === ChathamIslands, lit("Area Outside Region"))
+      .otherwise(concat(Filenames.dashToSpace(name), lit(" Region")))
+
+  /** The default region dimension (`code, name, raw_title, wkt`): every
+    * reference region with one NZTM box covering all of New Zealand, so
+    * each clip keeps its whole grid.
+    */
+  def fullCoverRegions(spark: SparkSession): DataFrame =
+    regionDim(spark).select(col("code"), col("name"),
+      rawTitle(col("code"), col("name")).as("raw_title"),
+      lit("POLYGON ((1000000 4700000, 2200000 4700000, 2200000 6300000, " +
+        "1000000 6300000, 1000000 4700000))").as("wkt"))
 
   // ---- DuckDB oracle text (same data, VALUES form) -------------------
 

@@ -13,10 +13,14 @@ import org.apache.spark.sql.functions._
   */
 object MetadataJson {
 
-  private val DateMin = "1991-01-01T00:00:00Z" // ETL.py:110–112, 454
-  private val DateMax = "2020-12-31T00:00:00Z" // ETL.py:115–117, 458
+  val DateMin = "1991-01-01T00:00:00Z" // ETL.py:110–112, 454
+  val DateMax = "2020-12-31T00:00:00Z" // ETL.py:115–117, 458
 
   private def dollarDate(v: Column): Column = struct(v.as("$date"))
+
+  /** The product's zip object path, `/{prefix}/{stem}.zip` (ETL.py:474–490). */
+  def src(prefix: Column, fileStem: Column): Column =
+    concat(lit("/"), prefix, lit("/"), fileStem, lit(".zip"))
 
   /** Assemble the document column. `coords` must be
     * array<array<array<double>>> (GeoJSON Polygon rings, ETL.py:451).
@@ -25,7 +29,7 @@ object MetadataJson {
       coords: Column, parameter: Column, period: Column, statistic: Column,
       region: Column, updatedAt: Column): Column =
     to_json(struct(
-      concat(lit("/"), prefix, lit("/"), fileStem, lit(".zip")).as("src"),
+      src(prefix, fileStem).as("src"),
       prefix.as("productRef"),
       struct(
         title.as("title"),
@@ -41,6 +45,22 @@ object MetadataJson {
         region.as("region"),
       ).as("metadata"),
     ))
+
+  /** The document of one clip product, every catalog string composed
+    * from the product's parameter name, statistic, period name and region
+    * title (ETL.py:474–489).
+    */
+  def product(prefix: Column, fileStem: Column, parameterName: Column,
+      statistic: Column, periodName: Column, regionTitle: Column,
+      coords: Column, updatedAt: Column): Column = {
+    val typeParam = Filenames.dashToSpace(parameterName)
+    doc(prefix, fileStem,
+      title = title(typeParam, periodName, regionTitle),
+      description = description(typeParam, statistic, lit(Filenames.Normals),
+        periodName, regionTitle),
+      coords = coords, parameter = typeParam, period = periodName,
+      statistic = statistic, region = regionTitle, updatedAt = updatedAt)
+  }
 
   /** Title/description templates (ETL.py:478–479). */
   def title(typeParam: Column, monthSeason: Column, regionTitle: Column): Column =

@@ -35,7 +35,11 @@ import graft.sinks.{S3Sink, ZipSink}
   */
 object Pipeline {
 
-  /** Regions dimension schema: code, name, raw_title, wkt (NZTM). */
+  /** A run's outcome: `catalog` reads the written catalog parquet store
+    * (one row per product), and `metrics` holds the `observe()` counters
+    * gathered while the run's products were built — `n_products`,
+    * `n_nonempty_clips`, `n_source_files` and `n_regions`.
+    */
   final case class Result(catalog: DataFrame,
       metrics: Map[String, Any] = Map.empty)
 
@@ -82,7 +86,7 @@ object Pipeline {
         // region code (contains alone would then match every file).
         // Scheme-prefix-agnostic, unlike anchoring on inputDir.
         scan.filter(col("path").contains(s"/$code/") &&
-          element_at(split(col("path"), "/"), -2) === code)
+          Filenames.regionCodeFromPath(col("path")) === code)
       case None => scan
     }
   }
@@ -90,7 +94,7 @@ object Pipeline {
   /** Run the full pipeline.
     *
     * @param inputDir   root of the .asc tree (region-code subfolders)
-    * @param regions    dimension with columns code, name, raw_title, wkt
+    * @param regions    dimension with columns code, name, raw_title, wkt (NZTM)
     * @param outDir     local/shared-FS output root (zips + json docs)
     * @param updatedAt  deterministic updatedAt stamp for metadata docs
     * @param srcRegion  optional source-region scope (a region-code
@@ -113,29 +117,14 @@ object Pipeline {
         col("yllcorner"), col("cellsize"), col("nodata"), col("values")).as("grid"))
 
     // PRJ-1/2 + JOIN-2: decode & rename.
-    val pDim = broadcast(Lookups.parameterDim(spark)
-      .select(col("code").as("parameter_code"), col("name").as("parameter_name")))
-    val tDim = broadcast(Lookups.periodDim(spark)
-      .select(col("code").as("period_token"), col("name").as("period_name")))
-
-    val decoded = files
-      .withColumn("file_name", element_at(split(col("path"), "/"), -1))
-      .withColumn("base_name", element_at(split(col("file_name"), "\\.asc$"), 1))
-      .withColumn("parameter_code", Filenames.parameterCode(col("base_name")))
-      .withColumn("statistic", Filenames.statistic(col("base_name")))
-      .withColumn("period_token", Filenames.periodToken(col("base_name")))
-      .join(pDim, "parameter_code")
-      .join(tDim, "period_token")
-      .withColumn("new_file_name",
-        Filenames.newFileName(col("parameter_name"), col("statistic"), col("period_name")))
+    val decoded = Filenames.rename(
+      files.withColumn("base_name", Filenames.baseName(col("path"))))
 
     // JOIN-1 + PRJ-3/4: cross join the broadcast region dim; the
     // region-constant footprint (OP-SP-5/6) is computed once per region.
-    val dims = broadcast(regions
-      .filter(col("code") =!= "99")
-      .select(col("code").as("region_code"), col("name").as("region_name"),
-        Filenames.normalizeTitle(col("raw_title")).as("region_title"),
-        col("wkt").as("region_wkt"), ringCoords(col("wkt")).as("region_coords")))
+    val dims = Lookups.clipRegions(regions,
+      Filenames.normalizeTitle(col("raw_title")).as("region_title"),
+      col("wkt").as("region_wkt"), ringCoords(col("wkt")).as("region_coords"))
 
     val pairs = decoded.crossJoin(dims)
       .withColumn("clipped_name",
@@ -152,21 +141,11 @@ object Pipeline {
         concat(lit("sum "), col("cl._8"))))
 
     // D5: metadata document with the region's reprojected footprint.
-    val typeParam = Filenames.dashToSpace(col("parameter_name"))
     val withDocs = clipped
       .withColumn("file_stem", element_at(split(col("clipped_name"), "\\.tif$"), 1))
-      .withColumn("metadata_json", MetadataJson.doc(
-        prefix = lit(prefix),
-        fileStem = col("file_stem"),
-        title = MetadataJson.title(typeParam, col("period_name"), col("region_title")),
-        description = MetadataJson.description(typeParam, col("statistic"),
-          lit("1991-2020"), col("period_name"), col("region_title")),
-        coords = col("region_coords"),
-        parameter = typeParam,
-        period = col("period_name"),
-        statistic = col("statistic"),
-        region = col("region_title"),
-        updatedAt = lit(updatedAt)))
+      .withColumn("metadata_json", MetadataJson.product(lit(prefix), col("file_stem"),
+        col("parameter_name"), col("statistic"), col("period_name"), col("region_title"),
+        col("region_coords"), lit(updatedAt)))
       // the persisted frame: product columns only
       .select(col("base_name"), col("new_file_name"), col("clipped_name"),
         col("region_code"), col("region_name"), col("region_title"),

@@ -49,16 +49,7 @@ object PipelineMain {
       case (Some(path), _) => graft.sources.GeoJsonSource.regions(spark, path)
       case (_, Some(path)) => spark.read.json(path)
         .select("code", "name", "raw_title", "wkt")
-      case _ =>
-        import spark.implicits._
-        // default: reference region dim with synthetic full-cover boxes
-        Lookups.regions.map { case (code, name) =>
-          val rawTitle =
-            if (code == "99") "Area Outside Region"
-            else name.replace("-", " ") + " Region"
-          (code, name, rawTitle,
-            "POLYGON ((1000000 4700000, 2200000 4700000, 2200000 6300000, 1000000 6300000, 1000000 4700000))")
-        }.toDF("code", "name", "raw_title", "wkt")
+      case _ => Lookups.fullCoverRegions(spark)
     }
 
     val result = Pipeline.run(spark, input, regions, out, updatedAt)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.{Filenames, Lookups, Manifest}
+import graft.etl.{Filenames, Lookups, Manifest, MetadataJson}
 
 /** ETL-parity queries — the reference's data-processing surface
   * (SURVEY.md §2, `Q:` tags) re-expressed as declarative DataFrame plans
@@ -21,26 +21,13 @@ object EtlQueries {
   private def manifestAsc(spark: SparkSession, dir: String): DataFrame =
     Manifest.build(spark, dir).filter(col("file_name").endsWith(".asc"))
 
-  /** Distinct base_name + decoded fields (PRJ-1). */
-  private def decodedBases(spark: SparkSession, dir: String): DataFrame =
-    Manifest.build(spark, dir)
-      .select("base_name").distinct()
-      .withColumn("parameter_code", Filenames.parameterCode(col("base_name")))
-      .withColumn("statistic", Filenames.statistic(col("base_name")))
-      .withColumn("period_token", Filenames.periodToken(col("base_name")))
+  /** The manifest's distinct base names. */
+  private def bases(spark: SparkSession, dir: String): DataFrame =
+    Manifest.build(spark, dir).select("base_name").distinct()
 
   /** Distinct (base_name, new_file_name) after the decode joins (PRJ-2). */
-  private def renamed(spark: SparkSession, dir: String): DataFrame = {
-    val pDim = broadcast(Lookups.parameterDim(spark)
-      .select(col("code").as("parameter_code"), col("name").as("parameter_name")))
-    val tDim = broadcast(Lookups.periodDim(spark)
-      .select(col("code").as("period_token"), col("name").as("period_name")))
-    decodedBases(spark, dir)
-      .join(pDim, "parameter_code")
-      .join(tDim, "period_token")
-      .withColumn("new_file_name",
-        Filenames.newFileName(col("parameter_name"), col("statistic"), col("period_name")))
-  }
+  private def renamed(spark: SparkSession, dir: String): DataFrame =
+    Filenames.rename(bases(spark, dir))
 
   private val sidecarExts = Seq(".tif", ".tfw", ".tif.aux.xml", ".tif.ovr", ".tif.lock")
 
@@ -117,11 +104,11 @@ object EtlQueries {
   }
 
   /** Streaming binaryFile scan of an on-disk region tree, decoded to
-    * the shared columns both streaming file queries key on —
+    * the shared columns the streaming file queries key on —
     * (path, modificationTime, length, content) from the source plus
-    * file_name / region_code / base_name. ONE definition so the
-    * explicit source schema and the base-name stripping cannot drift
-    * between q_stream_file_ingest and q_stream_cog_convert.
+    * region_code / base_name. ONE definition so the explicit source
+    * schema cannot drift between q_stream_file_ingest,
+    * q_stream_cog_convert and q_stream_pipeline.
     */
   private def ascFileStream(s: SparkSession, tree: String): DataFrame = {
     // the streaming file source requires an explicit schema; this is
@@ -140,10 +127,8 @@ object EtlQueries {
       .option("pathGlobFilter", "*.asc")
       .option("recursiveFileLookup", "true")
       .load(tree)
-      .withColumn("file_name", element_at(split(col("path"), "/"), -1))
       .withColumn("region_code", Filenames.regionCodeFromPath(col("path")))
-      .withColumn("base_name",
-        expr("substring(file_name, 1, length(file_name) - 4)"))
+      .withColumn("base_name", Filenames.baseName(col("path")))
   }
 
   /** The deterministic asciigrid side tree shared by q_spj_source and
@@ -191,7 +176,7 @@ object EtlQueries {
 
     // PRJ-1: positional filename decode (ETL.py:243–248).
     "q_parse_filename" -> ((s, dir) =>
-      decodedBases(s, dir).orderBy("base_name")),
+      Filenames.decode(bases(s, dir)).orderBy("base_name")),
 
     // PRJ-2/JOIN-2: code→name decode + recompose (ETL.py:248–255).
     "q_rename_lookup" -> ((s, dir) =>
@@ -199,46 +184,29 @@ object EtlQueries {
 
     // JOIN-2 full surface: all three broadcast dim decodes + PRJ-8
     // region-from-path (ETL.py:234, 248, 251, 275).
-    "q_broadcast_lookup_join" -> ((s, dir) => {
-      val pDim = broadcast(Lookups.parameterDim(s)
-        .select(col("code").as("parameter_code"), col("name").as("parameter_name")))
-      val tDim = broadcast(Lookups.periodDim(s)
-        .select(col("code").as("period_token"), col("name").as("period_name")))
-      val rDim = broadcast(Lookups.regionDim(s)
-        .select(col("code").as("region_code"), col("name").as("region_name")))
-      Manifest.build(s, dir)
-        .withColumn("parameter_code", Filenames.parameterCode(col("base_name")))
-        .withColumn("period_token", Filenames.periodToken(col("base_name")))
-        .withColumn("region_code", Filenames.regionCodeFromPath(col("path")))
-        .join(pDim, "parameter_code")
-        .join(tDim, "period_token")
-        .join(rDim, "region_code")
+    "q_broadcast_lookup_join" -> ((s, dir) =>
+      Filenames.rename(Manifest.build(s, dir)
+          .withColumn("region_code", Filenames.regionCodeFromPath(col("path"))))
+        .join(Lookups.regionNames(s), "region_code")
         .select("file_id", "parameter_name", "period_name", "region_code", "region_name")
-        .orderBy("file_id")
-    }),
+        .orderBy("file_id")),
 
     // PRJ-3: region "99" skip (ETL.py:272–273).
-    "q_filter_region" -> ((s, dir) => {
-      val rDim = broadcast(Lookups.regionDim(s)
-        .select(col("code").as("region_code"), col("name").as("region_name")))
+    "q_filter_region" -> ((s, dir) =>
       Manifest.build(s, dir)
-        .filter(col("region_code") =!= "99")
-        .join(rDim, "region_code")
+        .filter(Lookups.clipped(col("region_code")))
+        .join(Lookups.regionNames(s), "region_code")
         .select("file_id", "region_code", "region_name")
-        .orderBy("file_id")
-    }),
+        .orderBy("file_id")),
 
     // PRJ-4: region title normalization (ETL.py:276–279), exercised over
     // feature-layer-style raw titles rebuilt from the region dim.
-    "q_title_normalize" -> ((s, dir) => {
+    "q_title_normalize" -> ((s, dir) =>
       Lookups.regionDim(s)
         .select(col("code").as("region_code"),
-          when(col("code") === "99", lit("Area Outside Region"))
-            .otherwise(concat(translate(col("name"), "-", " "), lit(" Region")))
-            .as("raw_title"))
+          Lookups.rawTitle(col("code"), col("name")).as("raw_title"))
         .withColumn("title", Filenames.normalizeTitle(col("raw_title")))
-        .orderBy("region_code")
-    }),
+        .orderBy("region_code")),
 
     // PRJ-6: dash→space character translation (ETL.py:421).
     "q_dash_to_space" -> ((s, dir) =>
@@ -250,17 +218,13 @@ object EtlQueries {
     // JOIN-1: the files × regions cross product at the heart of the
     // pipeline (ETL.py:229–310) — region side broadcast once, not
     // re-fetched per file like the reference.
-    "q_cross_join_regions" -> ((s, dir) => {
-      val regions = broadcast(Lookups.regionDim(s)
-        .filter(col("code") =!= "99")
-        .select(col("code").as("region_code"), col("name").as("region_name")))
+    "q_cross_join_regions" -> ((s, dir) =>
       renamed(s, dir).select("new_file_name").distinct()
-        .crossJoin(regions)
+        .crossJoin(Lookups.clipRegions(Lookups.regionDim(s)))
         .withColumn("clipped_name",
           Filenames.clippedName(col("new_file_name"), col("region_name")))
         .select("new_file_name", "region_code", "region_name", "clipped_name")
-        .orderBy("new_file_name", "region_code")
-    }),
+        .orderBy("new_file_name", "region_code")),
 
     // PRJ-9/SNK-5: S3 object-key construction incl. slash stripping
     // (ETL.py:389–393); prefix variants cycle through the edge cases.
@@ -293,7 +257,8 @@ object EtlQueries {
     // cross join regions → metadata fields (ETL.py:417–425, 474–489),
     // re-parsing the output filename convention exactly like the
     // reference's create_json_file does (PRJ-7).
-    "q_product_catalog" -> ((s, dir) => productCatalog(s, dir)),
+    "q_product_catalog" -> ((s, dir) =>
+      catalog(renamed(s, dir).select("new_file_name").distinct()).orderBy("file_name")),
 
     // JOIN-2 alternative (SURVEY §1.4): the dictionary decode as a PURE
     // EXPRESSION — typedLit(Map) + element_at — no join at all. The map
@@ -545,15 +510,7 @@ object EtlQueries {
       val tree = pipelineTree(s)
       val out = java.nio.file.Files.createTempDirectory("graft_pipe_e2e_")
         .toString
-      import s.implicits._
-      val regions = Lookups.regions.map { case (code, name) =>
-        val rawTitle =
-          if (code == "99") "Area Outside Region"
-          else name.replace("-", " ") + " Region"
-        (code, name, rawTitle,
-          "POLYGON ((1000000 4700000, 2200000 4700000, 2200000 6300000, 1000000 6300000, 1000000 4700000))")
-      }.toDF("code", "name", "raw_title", "wkt")
-      val res = graft.etl.Pipeline.run(s, tree, regions, out,
+      val res = graft.etl.Pipeline.run(s, tree, Lookups.fullCoverRegions(s), out,
         updatedAt = "2026-01-01T00:00:00Z")
       res.catalog.select(col("base_name"), col("region_code"),
           col("region_title"), col("new_file_name"), col("clipped_name"),
@@ -582,19 +539,8 @@ object EtlQueries {
       val name =
         s"stream_ingest_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       graft.streaming.EventStreams.drainTuned(s, dir) {
-        val pDim = broadcast(Lookups.parameterDim(s)
-          .select(col("code").as("parameter_code"), col("name").as("parameter_name")))
-        val tDim = broadcast(Lookups.periodDim(s)
-          .select(col("code").as("period_token"), col("name").as("period_name")))
-        val decoded = ascFileStream(s, tree)
-          .withColumn("parameter_code", Filenames.parameterCode(col("base_name")))
-          .withColumn("statistic", Filenames.statistic(col("base_name")))
-          .withColumn("period_token", Filenames.periodToken(col("base_name")))
-          .join(pDim, "parameter_code")
-          .join(tDim, "period_token")
-          .select(col("region_code"), col("base_name"),
-            Filenames.newFileName(col("parameter_name"), col("statistic"),
-              col("period_name")).as("new_file_name"),
+        val decoded = Filenames.rename(ascFileStream(s, tree))
+          .select(col("region_code"), col("base_name"), col("new_file_name"),
             col("length").cast("bigint").as("n_bytes"))
         graft.streaming.EventStreams.runToCompletion(decoded, name,
             org.apache.spark.sql.streaming.OutputMode.Append())
@@ -644,7 +590,7 @@ object EtlQueries {
     // stream-static join → catalog metadata projection, incrementally —
     // the continuous-ingest mode of q_product_catalog. Stateless per
     // file (no watermark, no state store): each arriving grid emits its
-    // 16 catalog rows through the SAME catalogColumns projection the
+    // 16 catalog rows through the SAME catalog projection the
     // batch uses, dims broadcast once, so at 100 TB new grids land and
     // append with no shuffle. Gate: the tree carries exactly the
     // manifest's distinct base_name set, so the drained output
@@ -655,26 +601,7 @@ object EtlQueries {
       val name =
         s"stream_pipeline_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       graft.streaming.EventStreams.drainTuned(s, dir) {
-        val pDim = broadcast(Lookups.parameterDim(s)
-          .select(col("code").as("parameter_code"), col("name").as("parameter_name")))
-        val tDim = broadcast(Lookups.periodDim(s)
-          .select(col("code").as("period_token"), col("name").as("period_name")))
-        val regions = broadcast(Lookups.regionDim(s)
-          .filter(col("code") =!= "99")
-          .select(col("code").as("region_code"), col("name").as("region_name")))
-        val catalogStream = ascFileStream(s, tree)
-          .withColumn("parameter_code", Filenames.parameterCode(col("base_name")))
-          .withColumn("statistic", Filenames.statistic(col("base_name")))
-          .withColumn("period_token", Filenames.periodToken(col("base_name")))
-          .join(pDim, "parameter_code")
-          .join(tDim, "period_token")
-          .withColumn("new_file_name", Filenames.newFileName(
-            col("parameter_name"), col("statistic"), col("period_name")))
-          .select("new_file_name")
-          .crossJoin(regions)
-          .withColumn("file_name",
-            Filenames.clippedName(col("new_file_name"), col("region_name")))
-        val projected = catalogColumns(catalogStream)
+        val projected = catalog(Filenames.rename(ascFileStream(s, tree)).select("new_file_name"))
         graft.streaming.EventStreams.runToCompletion(projected, name,
             org.apache.spark.sql.streaming.OutputMode.Append())
           .distinct() // replay safety; the tree is one file per base_name
@@ -695,9 +622,7 @@ object EtlQueries {
       graft.sources.GeoJsonSource.features(s, graft.sources.GeoJsonSource.fixturePath)
         .join(dim, Seq("code"), "left")
         .select(col("code"), col("name"),
-          when(col("raw_title").startsWith("Area"), lit("Chatham Islands"))
-            .otherwise(split(col("raw_title"), " Region").getItem(0))
-            .as("region_title"),
+          Filenames.normalizeTitle(col("raw_title")).as("region_title"),
           col("gtype"), col("n_rings"), col("n_vertices"), col("wkt"))
         .orderBy("code")
     }),
@@ -722,10 +647,8 @@ object EtlQueries {
     // (SURVEY §7.6.3); the bbox derives from the region dim idx so the
     // oracle rebuilds the byte-identical JSON.
     "q_metadata_json" -> ((s, dir) => {
-      val regions = broadcast(Lookups.regionDim(s)
-        .filter(col("code") =!= "99")
-        .select(col("idx").cast("double").as("ridx"),
-          col("code").as("region_code"), col("name").as("region_name")))
+      val regions = Lookups.clipRegions(Lookups.regionDim(s),
+        col("idx").cast("double").as("ridx"))
       val params = Lookups.parameterDim(s)
         .select(col("code").as("param_code"), col("name").as("param_name"))
       val x0 = lit(1600000.0) + lit(9000.0) * col("ridx")
@@ -734,24 +657,13 @@ object EtlQueries {
       val y1 = y0 + lit(2000.0) + lit(400.0) * col("ridx")
       val coords = array(array(
         array(x0, y0), array(x0, y1), array(x1, y1), array(x1, y0), array(x0, y0)))
-      val typeParam = Filenames.dashToSpace(col("param_name"))
-      val regionTitle = Filenames.dashToSpace(col("region_name"))
       val fileStem = concat(col("param_name"), lit("_Mean_1991-2020_Annual_"),
         col("region_name"))
       params.crossJoin(regions)
         .select(col("param_code"), col("region_code"),
-          graft.etl.MetadataJson.doc(
-            prefix = lit("climate/grids"),
-            fileStem = fileStem,
-            title = graft.etl.MetadataJson.title(typeParam, lit("Annual"), regionTitle),
-            description = graft.etl.MetadataJson.description(
-              typeParam, lit("Mean"), lit("1991-2020"), lit("Annual"), regionTitle),
-            coords = coords,
-            parameter = typeParam,
-            period = lit("Annual"),
-            statistic = lit("Mean"),
-            region = regionTitle,
-            updatedAt = lit("2026-01-01T00:00:00Z")).as("metadata_json"))
+          MetadataJson.product(lit("climate/grids"), fileStem, col("param_name"),
+            lit("Mean"), lit("Annual"), Filenames.dashToSpace(col("region_name")),
+            coords, lit("2026-01-01T00:00:00Z")).as("metadata_json"))
         .orderBy("param_code", "region_code")
     }),
   )
@@ -761,24 +673,14 @@ object EtlQueries {
     sidecarExts.toDF("sidecar_ext")
   }
 
-  private def productCatalog(s: SparkSession, dir: String): DataFrame = {
-    val regions = broadcast(Lookups.regionDim(s)
-      .filter(col("code") =!= "99")
-      .select(col("code").as("region_code"), col("name").as("region_name")))
-    val catalog = renamed(s, dir).select("new_file_name").distinct()
-      .crossJoin(regions)
-      .withColumn("file_name",
-        Filenames.clippedName(col("new_file_name"), col("region_name")))
-    catalogColumns(catalog).orderBy("file_name")
-  }
-
-  /** The catalog metadata projection over a `file_name` column — the
-    * PRJ-7 re-parse of the output naming convention (ETL.py:417–425).
-    * ONE definition shared by the batch catalog (q_product_catalog) and
-    * its streaming twin (q_stream_pipeline), so batch ≡ stream holds by
-    * construction at the projection layer.
+  /** The product catalog of a `new_file_name` frame: × the clipped
+    * regions, each clip's `file_name`, then the catalog metadata
+    * projection — the PRJ-7 re-parse of the output naming convention
+    * (ETL.py:417–425). ONE definition shared by the batch catalog
+    * (q_product_catalog) and its streaming twin (q_stream_pipeline), so
+    * batch ≡ stream holds by construction.
     */
-  private def catalogColumns(catalog: DataFrame): DataFrame = {
+  private def catalog(names: DataFrame): DataFrame = {
     val comps = split(col("file_name"), "_")
     val typeParam = Filenames.dashToSpace(element_at(comps, 1))
     val statistic = element_at(comps, 2)
@@ -788,22 +690,23 @@ object EtlQueries {
     val regionTitle = Filenames.dashToSpace(regionStem)
     val fileStem = element_at(split(col("file_name"), "\\."), 1)
     val prefix = lit("climate/grids")
-    catalog.select(
-      col("file_name"),
-      concat(lit("/"), prefix, lit("/"), fileStem, lit(".zip")).as("src"),
-      prefix.as("product_ref"),
-      concat(lit("Climatology Grid "), typeParam, lit(" (1991-2020), "),
-        monthSeason, lit(", Region: "), regionTitle).as("title"),
-      concat(lit("This dataset comprises a 500m resolution grid of climatologic normals (averages) for: Parameter: "),
-        typeParam, lit("; Statistic: "), statistic, lit("; Period: "), period,
-        lit("; "), monthSeason, lit("; Region: "), regionTitle).as("description"),
-      typeParam.as("parameter"),
-      monthSeason.as("period"),
-      statistic.as("statistic"),
-      regionTitle.as("region"),
-      lit("1991-01-01T00:00:00Z").as("date_min"),
-      lit("2020-12-31T00:00:00Z").as("date_max"),
-    )
+    names.crossJoin(Lookups.clipRegions(Lookups.regionDim(names.sparkSession)))
+      .withColumn("file_name",
+        Filenames.clippedName(col("new_file_name"), col("region_name")))
+      .select(
+        col("file_name"),
+        MetadataJson.src(prefix, fileStem).as("src"),
+        prefix.as("product_ref"),
+        MetadataJson.title(typeParam, monthSeason, regionTitle).as("title"),
+        MetadataJson.description(typeParam, statistic, period, monthSeason,
+          regionTitle).as("description"),
+        typeParam.as("parameter"),
+        monthSeason.as("period"),
+        statistic.as("statistic"),
+        regionTitle.as("region"),
+        lit(MetadataJson.DateMin).as("date_min"),
+        lit(MetadataJson.DateMax).as("date_max"),
+      )
   }
 
   /** On-disk .asc tree with ONE file per distinct manifest base_name —

@@ -764,7 +764,8 @@ object RelationalQueries {
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
         .distinct()
-      // NOT cached — measured (ProbeItemsets, sf0.1, 5-pass): cached
+      // NOT cached — measured (docs/ROUND14_NOTES.md, "Measured perf
+      // work"; sf0.1, 5-pass): cached
       // 3.63/3.92 s min/med vs uncached 1.23/1.41. The consumers DO
       // need different exchanges, but the lineage (parquet scan →
       // broadcast dim join → distinct) recomputes inside whole-stage

@@ -1879,7 +1879,7 @@ object TextQueries {
     // NOT cached: its lineage (scan → HOF bigrams → one hash agg)
     // recomputes inside codegen cheaper than materializing a
     // Θ(corpus-bigrams) string frame — the q_freq_itemsets lesson
-    // (ProbeItemsets: cached 3.6 s vs uncached 1.2 s on the same
+    // (docs/ROUND14_NOTES.md: cached 3.6 s vs uncached 1.2 s on the same
     // shape), and ReuseExchange dedupes the self-join's two sides.
     "q_sparse_knn" -> ((s, dir) => {
       val bg = s.read.parquet(s"$dir/documents.parquet")

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -234,10 +236,7 @@ object EventStreams {
     * drain-and-compare path.
     */
   def runToCompletion(df: DataFrame, name: String, outputMode: OutputMode): DataFrame = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(base, s"graft_ckpt_")
+    val ckpt = tempCheckpoint()
     val q = df.writeStream
       .format("memory")
       .queryName(name)
@@ -246,11 +245,7 @@ object EventStreams {
       .start()
     try q.processAllAvailable() finally {
       q.stop()
-      try {
-        java.nio.file.Files.walk(ckpt)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      } catch { case _: Throwable => () }
+      deleteCheckpoint(ckpt)
     }
     val out = df.sparkSession.table(name)
     // the memory sink's temp view (UUID name, never reused) would
@@ -293,20 +288,28 @@ object EventStreams {
     * fixture, so the provider stays an operator-set `--conf` with
     * that data point recorded.
     */
-  def statePartitions(s: SparkSession, dir: String = ""): Int =
-    s.conf.getOption("spark.graft.stream.statePartitions")
+  def statePartitions(s: SparkSession, dir: String = ""): Int = {
+    val key = "spark.graft.stream.statePartitions"
+    s.conf.getOption(key)
       .map(_.toInt)
       .getOrElse {
+        val path = s"$dir/events.parquet"
         val bytes =
           if (dir.isEmpty) 0L
           else try {
-            val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+            val p = new org.apache.hadoop.fs.Path(path)
             p.getFileSystem(s.sparkContext.hadoopConfiguration)
               .getContentSummary(p).getLength
-          } catch { case _: Throwable => 0L }
+          } catch {
+            case NonFatal(e) =>
+              log.warn(s"$key: could not size $path ($e); " +
+                "taking the minimum partition count")
+              0L
+          }
         val cores = s.sparkContext.defaultParallelism
         math.max(2, math.min((bytes >> 20).toInt, cores))
       }
+  }
 
   def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -354,10 +357,7 @@ object EventStreams {
     */
   def drainParquetFiles(s: SparkSession, schema: String, pathGlob: String)(
       update: (DataFrame, Long) => Unit): Unit = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(base, "graft_ckpt_")
+    val ckpt = tempCheckpoint()
     val q = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -369,13 +369,31 @@ object EventStreams {
       .start()
     try { q.awaitTermination(); () } finally {
       q.stop()
-      try {
-        val walk = java.nio.file.Files.walk(ckpt)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      } catch { case _: Throwable => () }
+      deleteCheckpoint(ckpt)
       s.streams.resetTerminated()
     }
   }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** A fresh checkpoint directory, on /dev/shm when it is writable. */
+  private def tempCheckpoint(): java.nio.file.Path = {
+    val shm = new java.io.File("/dev/shm")
+    val base = if (shm.isDirectory && shm.canWrite) shm.toPath
+      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    java.nio.file.Files.createTempDirectory(base, "graft_ckpt_")
+  }
+
+  /** Recursively deletes a stopped query's checkpoint; a tree that
+    * cannot be deleted is left behind with a warning.
+    */
+  private def deleteCheckpoint(ckpt: java.nio.file.Path): Unit =
+    try {
+      val walk = java.nio.file.Files.walk(ckpt)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+      finally walk.close()
+    } catch {
+      case NonFatal(e) => log.warn(s"could not delete checkpoint $ckpt ($e)")
+    }
 }

@@ -46,6 +46,17 @@ class EtlQueriesSpec extends SparkSpecBase {
     }
   }
 
+  test("rename keeps only names whose parameter code and period token are known") {
+    import spark.implicits._
+    val df = graft.etl.Filenames.rename(Seq(
+      "grid_02_NZ_norm_Mean_1991-2020_monthly7",
+      "grid_98_NZ_norm_Mean_1991-2020_monthly7", // no parameter 98
+      "grid_02_NZ_norm_Mean_1991-2020_monthly13", // no period monthly13
+    ).toDF("base_name"))
+    assert(df.select("base_name", "new_file_name").as[(String, String)].collect().toSeq ==
+      Seq("grid_02_NZ_norm_Mean_1991-2020_monthly7" -> "Mean-Air-Temperature_Mean_1991-2020_July"))
+  }
+
   test("title normalization: ' Region' stripped, Area→Chatham Islands (ETL.py:276–279)") {
     val m = EtlQueries.queries("q_title_normalize")(spark, sf)
       .collect().map(r => r.getAs[String]("region_code") -> r.getAs[String]("title")).toMap

@@ -8,7 +8,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
@@ -239,6 +242,40 @@ class PipelineSpec extends SparkSpecBase {
         assert(schemas == Set("struct<path:string,ncols:int,nrows:int,xllcorner:double," +
           "yllcorner:double,cellsize:double,nodata:double,values:array<double>>"),
           s"pipeline scans read: $schemas")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("decode joins broadcast-hash, the region side broadcast-nested-loop") {
+    // every physical node of an executed plan, through AQE stages and
+    // into a cached relation's own plan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.run(spark, inputDir, regionsDf, s"$work/out-plan",
+        updatedAt = "2026-01-01T00:00:00Z")
+      eventually(timeout(Span(30, Seconds))) {
+        // the zip/json pass and the catalog write both read the persisted
+        // product frame, whose plan holds every join of the run
+        val joined = plans.asScala.toSeq.map(nodes)
+          .filter(_.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+        assert(joined.size == 2, s"plans with the region join: ${plans.asScala.mkString("\n\n")}")
+        joined.foreach { ns =>
+          val joins = ns.collect { case j: BaseJoinExec => j.nodeName }
+          assert(joins.sorted == Seq("BroadcastHashJoin", "BroadcastHashJoin",
+            "BroadcastNestedLoopJoin"), s"joins of a run: $joins in\n${ns.head}")
+        }
       }
     } finally spark.listenerManager.unregister(listener)
   }

@@ -1010,7 +1010,7 @@ class PlanShapeSpec extends SparkSpecBase {
       s"pair generation must be basket-keyed:\n$p")
     assert(!p.contains("CartesianProduct"), s"no product anywhere:\n$p")
     assert(!p.contains("InMemoryTableScan"),
-      s"the basket frame is deliberately NOT cached (ProbeItemsets A/B):\n$p")
+      s"the basket frame is deliberately NOT cached (cache A/B in docs/ROUND14_NOTES.md, \"Measured perf work\"):\n$p")
   }
 
   test("q_sparse_knn: the df window is an absolute clamp and the pair " +

@@ -1,28 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
-  /** Evaluate a query's FULL physical plan (r16). The previous consume
-    * action was `df.count()`, which re-optimizes with the count on top
-    * and PRUNES: a query tail ending in a global aggregate collapses
-    * to a constant-1-row count that never executes the body at all,
-    * and any final projection's expressions are dropped because row
-    * counting needs no columns. That is how the r15 Part-8 mystery
-    * happened — q_confusion_matrix's carried per-token HOF never ran
-    * under the bench (global-agg tail, pruned to ~0.6 s) while the
-    * shape-identical q_calibration_bins paid it in full (grouped
-    * tail keeps its keys, and the upstream aggregate's truth GROUP
-    * key keeps the HOF) at 3.6 s: the "5x execution mode" was two
-    * different COUNT plans, not two modes of one plan. `toRdd` skips
-    * the re-optimization and runs the exact plan the query declares —
-    * every operator, every output column — so timed numbers now
-    * measure what Verify and a real consumer pay. (RDD count does not
-    * collect rows to the driver; rows stream as InternalRow.)
-    */
-  private def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.queryExecution.toRdd.count(); ()
-  }
-
   /** Fixed headline subset for the one-line summary. The driver captures only
     * the last ~2000 chars of output, so the printed JSON line must stay well
     * under that; the full per-query map (all ~120 queries) goes to
@@ -135,98 +117,90 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    // canonicalized ONCE and used for reads, the prev-base sf guard,
-    // the detail-file routing, and the emitted "sf" field alike — a
-    // trailing slash or '.' spelling must not make those checks
-    // disagree (one would overwrite the base while the other stops
-    // comparing against it)
-    val sfDir = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)).getCanonicalPath
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // One measurement is not a signal: the same 119-query suite measured
-    // 88.6 s and 151.4 s on identical code in round 5 (JIT/GC/page-cache
-    // phase). Per-query MEDIAN of `passes` runs is what gets reported and
-    // compared across rounds; min/max ride along in the detail file so the
-    // spread itself is visible.
-    val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // no .crc sidecars from Spark's own local writes (see scaladoc)
-    graft.sinks.S3Sink.disableLocalWriteChecksums(spark)
-    // untimed warmup: JIT/codegen/session init otherwise lands entirely
-    // on whichever query happens to iterate first
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
-    } catch { case _: Throwable => () }
-    // fixture-schema tripwire (non-fatal here — the bench should still
-    // measure whatever runs — but drift gets named up front instead of
-    // surfacing as an opaque per-query error cluster)
-    try graft.sources.FixtureContract.violations(spark, sfDir)
-      .foreach(v => System.err.println(s"[bench] FIXTURE CONTRACT: $v"))
-    catch { case _: Throwable => () }
-
-    // optional comma-separated subset for local iteration
-    // (SPARK_GRAFT_ONLY=q_a,q_b); full suite when unset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
-    // Detail-file routing, decided ONCE and used for both the prev-base
-    // READ and this run's write: a SPARK_GRAFT_ONLY subset run must NOT
-    // overwrite the full-suite detail file (the committed cross-round
-    // regression base), and neither may a full-suite run at a
-    // NON-canonical sfDir (a scale fixture, a local sf0.001 iteration)
-    // — one once overwrote the working-tree base in place (r12). Alt
-    // runs get a PER-SF file (basename + a short path digest so
-    // same-named dirs can't clobber each other), and read their prev
-    // base from the SAME per-sf file, so cross-run regression
-    // comparison works at scale fixtures too.
-    val detailName =
-      if (only.isDefined) "BENCH_DETAIL_SUBSET.json"
-      else if (sfDir != new java.io.File(DefaultSfDir).getCanonicalPath) {
-        val base = new java.io.File(sfDir).getName
-          .replaceAll("[^A-Za-z0-9._-]", "_")
-        val md5 = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-        s"BENCH_DETAIL_${base}_$md5.json"
-      } else "BENCH_DETAIL.json"
-
-    // Previous run's per-query medians, read BEFORE this run overwrites
-    // the detail file — the committed base (or the per-sf sibling for
-    // alt runs) is the comparison base for the regression report.
-    val prevDetail = new java.io.File(detailName)
+  /** Read the previous run's detail file as the comparison base. A
+    * missing file, a refused one and an unreadable one all mean
+    * "nothing compared" — the latter two say so on stderr, naming the
+    * file, so a gate that passes for lack of a base leaves a trace.
+    */
+  private[graft] def readPrevBase(file: java.io.File, sfDir: String): PrevBase = {
     val emptyBase = PrevBase(Map.empty, Map.empty, None, None)
-    val prev: PrevBase =
-      if (!prevDetail.exists()) emptyBase
-      else try {
-        val src = scala.io.Source.fromFile(prevDetail, "UTF-8")
-        val txt = try src.mkString finally src.close()
-        parsePrevBase(txt, sfDir) match {
-          case Right(m) => m
-          case Left(reason) =>
-            System.err.println(s"[bench] PREV BASE REFUSED ($detailName): $reason")
-            emptyBase
-        }
-      } catch { case _: Throwable => emptyBase }
+    if (!file.exists()) emptyBase
+    else try {
+      val src = scala.io.Source.fromFile(file, "UTF-8")
+      val txt = try src.mkString finally src.close()
+      parsePrevBase(txt, sfDir) match {
+        case Right(m) => m
+        case Left(reason) =>
+          System.err.println(s"[bench] PREV BASE REFUSED (${file.getPath}): $reason")
+          emptyBase
+      }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] PREV BASE UNREADABLE (${file.getPath}): $e")
+        emptyBase
+    }
+  }
 
-    // Per query: run `passes` times back-to-back, keep the median (and the
-    // spread). A broken query must surface as an "err" entry, never as a
-    // near-zero wall time flattering the total. Run order is RANDOMIZED per
-    // pass (deterministic seed = pass index, so runs are reproducible):
+  /** One query's median timed pass: its build/plan/exec split (they add
+    * up to the recorded median time) and the jobs, stages and tasks it
+    * started. Record-only: no gate reads it.
+    */
+  private[graft] final case class Split(build: Double, plan: Double, exec: Double,
+      jobs: Double, stages: Double, tasks: Double) {
+    def total: Double = build + plan + exec
+  }
+
+  /** The median pass by total time — the phase-wise mean of the two
+    * middle passes for an even count — so its total is the median.
+    */
+  private[graft] def medianSplit(xs: Seq[Split]): Split = {
+    val t = xs.sortBy(_.total)
+    val (a, b) = (t((t.size - 1) / 2), t(t.size / 2))
+    Split((a.build + b.build) / 2, (a.plan + b.plan) / 2, (a.exec + b.exec) / 2,
+      (a.jobs + b.jobs) / 2, (a.stages + b.stages) / 2, (a.tasks + b.tasks) / 2)
+  }
+
+  /** One query's timed passes: seconds per pass in pass order (a failed
+    * pass counts its time to the throw), its first error, and the
+    * median pass's split (absent when any pass failed).
+    */
+  private[graft] final case class QueryTimes(
+      times: Vector[Double], err: Option[String], split: Option[Split])
+
+  /** Everything the timed passes measured: per-query times in name
+    * order, and the [pass, position, seconds] series of the CPU, I/O,
+    * stage and job canaries.
+    */
+  private[graft] final case class Measured(
+      queries: Seq[(String, QueryTimes)],
+      canary: Seq[(Int, Int, Double)],
+      ioCanary: Seq[(Int, Int, Double)],
+      stageCanary: Seq[(Int, Int, Double)],
+      jobCanary: Seq[(Int, Int, Double)])
+
+  /** `"phases"` detail map: each query's median-pass split. */
+  private[graft] def phasesJson(queries: Seq[(String, QueryTimes)]): String =
+    queries.collect { case (k, QueryTimes(_, _, Some(p))) =>
+      s"${Harness.json(k)}:{" + f""""build":${p.build}%.6f,"plan":${p.plan}%.6f,""" +
+        f""""exec":${p.exec}%.6f,"jobs":${p.jobs}%.1f,"stages":${p.stages}%.1f,""" +
+        f""""tasks":${p.tasks}%.1f}"""
+    }.mkString("{", ",", "}")
+
+  /** Run `queries` for `passes` timed suite passes on `spark`, with the
+    * canaries interleaved (see the design notes inside).
+    */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      passes: Int): Measured = {
+    // Per query: run `passes` times, keep the median (and the spread). A
+    // broken query must surface as an "err" entry, never as a near-zero
+    // wall time flattering the total. Run order is RANDOMIZED per pass
+    // (deterministic seed = pass index, so runs are reproducible):
     // rounds 9–10 both showed positional suite-interaction — a query's
     // neighbors (GC debt, page-cache state) leaking into its median when
     // every pass visits queries in the same order. Shuffling per pass turns
     // that systematic bias into symmetric noise the median absorbs.
-    val selected = only match {
-      case Some(set) => SparkEntry.queries.filter { case (k, _) => set(k) }
-      case None => SparkEntry.queries
-    }
+    //
     // NOTE on in-suite vs isolated numbers: a mid-suite query can pay
     // collector debt from the ~450 executions before it (q_ngram_novelty
     // once measured 3.7 s in-suite vs 1.0 s isolated on identical code —
@@ -253,7 +227,7 @@ object Bench {
     // canary under a regressed query implicates the code, an elevated
     // canary implicates the machine. Cache release between queries is
     // required for hygiene but is NOT part of any query's timed window.
-    val baseOrder = selected.toSeq.sortBy(_._1)
+    val baseOrder = queries.sortBy(_._1)
     val canaryEvery = 20
     val canaryDf = spark.range(4000000).selectExpr("sum(id * 3 + 1) as s")
     // Each canary sample is the MIN of two back-to-back collects (r13
@@ -286,6 +260,196 @@ object Bench {
       ioCanaryDf.collect()
       (System.nanoTime() - t0) / 1e9
     }
+    // MULTI-STAGE canary (VERDICT r18 #4): a fixed-shape 8-stage
+    // shuffle chain on constant data. The single-job CPU canary indexes
+    // raw compute but under-reads PER-STAGE overhead shifts (task
+    // scheduling, shuffle write/read, stage turnaround): the r18 host
+    // phase elevated 15–30-stage iterative queries 1.5–1.9× while the
+    // CPU canary read 1.07×, and six flags needed a manual old-code A/B
+    // to settle (docs/LEVEL_SHIFTS.md). This job IS the canary class
+    // those queries resemble. Shape: 8 chained repartition exchanges
+    // over 2M constant rows + one final sum — all shuffle machinery, no
+    // data growth. A FRESH DataFrame per sample forces fresh RDD
+    // lineage (no cross-sample shuffle reuse) while codegen caches by
+    // generated source, so samples after the untimed warmup measure the
+    // machine, not compilation. Each sample = min of 3 executions
+    // (same debt-shedding rationale as minOf2 on the CPU canary).
+    def mkStageCanaryDf(): org.apache.spark.sql.DataFrame = {
+      import org.apache.spark.sql.functions.{col, lit}
+      var df = spark.range(1 << 21)
+        .select((col("id") % 65536).as("k"), col("id").as("v"))
+      var i = 0
+      while (i < 8) { df = df.repartition(col("k") + lit(i)); i += 1 }
+      df.selectExpr("sum(v) as s")
+    }
+    def stageCanaryTime(): Double = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      mkStageCanaryDf().queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    // JOB-LAUNCH canary (round 20): N trivial single-task jobs
+    // back-to-back — indexes per-job driver/scheduler turnaround, which
+    // the stage canary (one 9-stage job) amortizes across its shuffles
+    // and the CPU canary (one job per sample) reads only once per
+    // sample. Micro-batch streaming drains and multi-sink pipelines
+    // launch dozens of tiny jobs per query, so a host phase in job
+    // turnaround scales them ~linearly while every other canary stays
+    // flat. 16 jobs per sample, min of 3, one sample per pass (rides at
+    // pass boundaries beside the stage canary). RECORD-ONLY — same
+    // arming discipline as meta_canary.
+    val jobCanaryRdd = spark.sparkContext.parallelize(Seq(1), 1)
+    def jobCanaryTime(): Double = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      var i = 0
+      while (i < 16) { jobCanaryRdd.count(); i += 1 }
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    canaryTime(); ioCanaryTime() // untimed compile/JIT of the canary plans
+    Harness.attempt("[bench] stage canary warm-up")(stageCanaryTime())
+    Harness.attempt("[bench] job canary warm-up")(jobCanaryTime())
+    val canarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
+    val ioCanarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
+    val stageCanarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
+    val jobCanarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
+    val timesBy = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
+    val splitsBy = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Split]]
+    val errBy = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // UNTIMED pass 0 (r15, VERDICT #3): execute every selected query once
+    // before any timed pass. Two measurement problems die here. (1) The
+    // write-once side stores (BucketedTables postings/bucketed layouts,
+    // SideStores round-trip copies, IVF/PQ memo artifacts) are built on
+    // first touch, so their build cost used to land inside the pass-1
+    // time of whichever family query the shuffle happened to order first
+    // — nondeterministic attribution that poisoned that query's minmax.
+    // (2) The r14 scale-fixture lesson: a single cold execution can read
+    // 3–5× its steady state from codegen/JIT/first-read alone, so
+    // 1-pass scale artifacts carried phantom spikes. NOTE the r14
+    // warm_total inflation itself was adjudicated NOT to be pass-1
+    // builds: reconstructing per-pass times from BENCH_DETAIL minmax
+    // vs warm shows the q_bool_retrieval/q_spj_source/q_ann_ivf_probe2
+    // spikes sat in passes 2–3 with pass 1 at the median — later-pass
+    // load/GC bursts under the driver's load_ratio 1.32, which no
+    // prebuild can fix. Pass 0 still makes every timed number a warm
+    // number (build-free, JIT-free), so minmax spreads and warm_total
+    // become interpretable machine-load evidence instead of a mix of
+    // warmup and load. Disable with SPARK_GRAFT_PREBUILD=0 to study
+    // cold behavior deliberately. Errors here are ignored — the timed
+    // passes record them through the normal err channel.
+    if (sys.env.getOrElse("SPARK_GRAFT_PREBUILD", "1") != "0") {
+      baseOrder.foreach { case (name, fn) =>
+        // still untimed + non-fatal, but never silent: a prebuild OOM
+        // or executor loss poisons every timed pass downstream, and an
+        // empty catch would leave only timing anomalies as evidence.
+        Harness.timedRun(spark, sfDir, fn).left.foreach(f => System.err.println(
+          s"[bench] prebuild $name failed: ${f.error.getClass.getName}"))
+      }
+    }
+    // jobs/stages/tasks per timed run: counts are taken (after the
+    // listener bus drains, outside the timed window) right before and
+    // right after each run, so canary jobs never land on a query
+    val counter = new Harness.JobCounter(spark)
+    try for (pass <- 1 to passes) {
+      var pos = 0
+      // one stage-canary sample per suite pass: heavier than the CPU/IO
+      // canaries (8 shuffles), so it rides at pass boundaries rather
+      // than every 20 queries — 3 samples across a run span the same
+      // wall-clock window the queries do
+      Harness.attempt("[bench] stage canary")(stageCanaryTime())
+        .foreach(t => stageCanarySeries += ((pass, 0, t)))
+      Harness.attempt("[bench] job canary")(jobCanaryTime())
+        .foreach(t => jobCanarySeries += ((pass, 0, t)))
+      // fresh deterministic shuffle per pass: same seed → same order on a
+      // re-run of the same pass, different order across passes
+      val order = new scala.util.Random(7919L * pass).shuffle(baseOrder)
+      order.foreach { case (name, fn) =>
+        if (pos % canaryEvery == 0) {
+          canarySeries += ((pass, pos, canaryTime()))
+          ioCanarySeries += ((pass, pos, ioCanaryTime()))
+        }
+        counter.take()
+        val run = Harness.timedRun(spark, sfDir, fn)
+        val (jobs, stages, tasks) = counter.take()
+        run match {
+          case Right(p) =>
+            timesBy(name) = timesBy.getOrElse(name, Vector.empty) :+ p.total
+            splitsBy(name) = splitsBy.getOrElse(name, Vector.empty) :+
+              Split(p.build, p.plan, p.exec, jobs, stages, tasks)
+          case Left(f) =>
+            timesBy(name) = timesBy.getOrElse(name, Vector.empty) :+ f.seconds
+            if (!errBy.contains(name)) errBy(name) = Option(f.error.getMessage)
+              .getOrElse(f.error.getClass.getName).take(200)
+        }
+        pos += 1
+      }
+      canarySeries += ((pass, pos, canaryTime()))
+      ioCanarySeries += ((pass, pos, ioCanaryTime()))
+    } finally counter.close()
+    Measured(
+      baseOrder.map { case (name, _) =>
+        val err = errBy.get(name)
+        name -> QueryTimes(timesBy(name), err,
+          if (err.isEmpty) Some(medianSplit(splitsBy(name))) else None)
+      },
+      canarySeries.toSeq, ioCanarySeries.toSeq,
+      stageCanarySeries.toSeq, jobCanarySeries.toSeq)
+  }
+
+  def main(args: Array[String]): Unit = {
+    // canonicalized ONCE and used for reads, the prev-base sf guard,
+    // the detail-file routing, and the emitted "sf" field alike — a
+    // trailing slash or '.' spelling must not make those checks
+    // disagree (one would overwrite the base while the other stops
+    // comparing against it)
+    val sfDir = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)).getCanonicalPath
+    // One measurement is not a signal: the same 119-query suite measured
+    // 88.6 s and 151.4 s on identical code in round 5 (JIT/GC/page-cache
+    // phase). Per-query MEDIAN of `passes` runs is what gets reported and
+    // compared across rounds; min/max ride along in the detail file so the
+    // spread itself is visible.
+    val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    // fixture-schema tripwire (non-fatal here — the bench should still
+    // measure whatever runs — but drift gets named up front instead of
+    // surfacing as an opaque per-query error cluster)
+    Harness.attempt("[bench] fixture contract check") {
+      graft.sources.FixtureContract.violations(spark, sfDir)
+        .foreach(v => System.err.println(s"[bench] FIXTURE CONTRACT: $v"))
+    }
+    // optional comma-separated subset for local iteration
+    // (SPARK_GRAFT_ONLY=q_a,q_b); full suite when unset
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+    // Detail-file routing, decided ONCE and used for both the prev-base
+    // READ and this run's write: a SPARK_GRAFT_ONLY subset run must NOT
+    // overwrite the full-suite detail file (the committed cross-round
+    // regression base), and neither may a full-suite run at a
+    // NON-canonical sfDir (a scale fixture, a local sf0.001 iteration)
+    // — one once overwrote the working-tree base in place (r12). Alt
+    // runs get a PER-SF file (basename + a short path digest so
+    // same-named dirs can't clobber each other), and read their prev
+    // base from the SAME per-sf file, so cross-run regression
+    // comparison works at scale fixtures too.
+    val detailName =
+      if (only.isDefined) "BENCH_DETAIL_SUBSET.json"
+      else if (sfDir != new java.io.File(DefaultSfDir).getCanonicalPath) {
+        val base = new java.io.File(sfDir).getName
+          .replaceAll("[^A-Za-z0-9._-]", "_")
+        val md5 = java.security.MessageDigest.getInstance("MD5")
+          .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+        s"BENCH_DETAIL_${base}_$md5.json"
+      } else "BENCH_DETAIL.json"
+
+    // Previous run's per-query medians, read BEFORE this run overwrites
+    // the detail file — the committed base (or the per-sf sibling for
+    // alt runs) is the comparison base for the regression report.
+    val prev = readPrevBase(new java.io.File(detailName), sfDir)
+    val selected = only match {
+      case Some(set) => SparkEntry.queries.filter { case (k, _) => set(k) }
+      case None => SparkEntry.queries
+    }
     // Filesystem WRITE canary — the environment key for sink-heavy
     // queries (VERDICT r17 #4): q_pipeline_e2e's wall time is dominated
     // by temp-dir sink writes, and identical code measured a tight
@@ -310,7 +474,7 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.min
     }
-    val fsCanary = try fsWriteCanary() catch { case _: Throwable => 0.0 }
+    val fsCanary = Harness.attempt("[bench] fs write canary")(fsWriteCanary()).getOrElse(0.0)
     // Small-file METADATA canary (round 20): the fs write canary's one
     // 256 KiB create+fsync+delete is dominated by the fsync and
     // under-reads pure namespace cost — create/rename/delete of many
@@ -342,151 +506,22 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.min
     }
-    val metaCanaryMed = try metaCanary() catch { case _: Throwable => 0.0 }
-    // MULTI-STAGE canary (VERDICT r18 #4): a fixed-shape 8-stage
-    // shuffle chain on constant data. The single-job CPU canary indexes
-    // raw compute but under-reads PER-STAGE overhead shifts (task
-    // scheduling, shuffle write/read, stage turnaround): the r18 host
-    // phase elevated 15–30-stage iterative queries 1.5–1.9× while the
-    // CPU canary read 1.07×, and six flags needed a manual old-code A/B
-    // to settle (docs/LEVEL_SHIFTS.md). This job IS the canary class
-    // those queries resemble. Shape: 8 chained repartition exchanges
-    // over 2M constant rows + one final sum — all shuffle machinery, no
-    // data growth. A FRESH DataFrame per sample forces fresh RDD
-    // lineage (no cross-sample shuffle reuse) while codegen caches by
-    // generated source, so samples after the untimed warmup measure the
-    // machine, not compilation. Each sample = min of 3 executions
-    // (same debt-shedding rationale as minOf2 on the CPU canary).
-    def mkStageCanaryDf(): org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.functions.{col, lit}
-      var df = spark.range(1 << 21)
-        .select((col("id") % 65536).as("k"), col("id").as("v"))
-      var i = 0
-      while (i < 8) { df = df.repartition(col("k") + lit(i)); i += 1 }
-      df.selectExpr("sum(v) as s")
-    }
-    def stageCanaryTime(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      consume(mkStageCanaryDf())
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    // JOB-LAUNCH canary (round 20): N trivial single-task jobs
-    // back-to-back — indexes per-job driver/scheduler turnaround, which
-    // the stage canary (one 9-stage job) amortizes across its shuffles
-    // and the CPU canary (one job per sample) reads only once per
-    // sample. Micro-batch streaming drains and multi-sink pipelines
-    // launch dozens of tiny jobs per query, so a host phase in job
-    // turnaround scales them ~linearly while every other canary stays
-    // flat. 16 jobs per sample, min of 3, one sample per pass (rides at
-    // pass boundaries beside the stage canary). RECORD-ONLY — same
-    // arming discipline as meta_canary.
-    val jobCanaryRdd = spark.sparkContext.parallelize(Seq(1), 1)
-    def jobCanaryTime(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 16) { jobCanaryRdd.count(); i += 1 }
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    canaryTime(); ioCanaryTime() // untimed compile/JIT of the canary plans
-    try stageCanaryTime() catch { case _: Throwable => () } // untimed warmup
-    try jobCanaryTime() catch { case _: Throwable => () } // untimed warmup
-    val canarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-    val ioCanarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-    val stageCanarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-    val jobCanarySeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-    val timesBy = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    val errBy = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // UNTIMED pass 0 (r15, VERDICT #3): execute every selected query once
-    // before any timed pass. Two measurement problems die here. (1) The
-    // write-once side stores (BucketedTables postings/bucketed layouts,
-    // SideStores round-trip copies, IVF/PQ memo artifacts) are built on
-    // first touch, so their build cost used to land inside the pass-1
-    // time of whichever family query the shuffle happened to order first
-    // — nondeterministic attribution that poisoned that query's minmax.
-    // (2) The r14 scale-fixture lesson: a single cold execution can read
-    // 3–5× its steady state from codegen/JIT/first-read alone, so
-    // 1-pass scale artifacts carried phantom spikes. NOTE the r14
-    // warm_total inflation itself was adjudicated NOT to be pass-1
-    // builds: reconstructing per-pass times from BENCH_DETAIL minmax
-    // vs warm shows the q_bool_retrieval/q_spj_source/q_ann_ivf_probe2
-    // spikes sat in passes 2–3 with pass 1 at the median — later-pass
-    // load/GC bursts under the driver's load_ratio 1.32, which no
-    // prebuild can fix. Pass 0 still makes every timed number a warm
-    // number (build-free, JIT-free), so minmax spreads and warm_total
-    // become interpretable machine-load evidence instead of a mix of
-    // warmup and load. Disable with SPARK_GRAFT_PREBUILD=0 to study
-    // cold behavior deliberately. Errors here are ignored — the timed
-    // passes record them through the normal err channel.
-    if (sys.env.getOrElse("SPARK_GRAFT_PREBUILD", "1") != "0") {
-      baseOrder.foreach { case (name, fn) =>
-        // still untimed + non-fatal, but never silent: a prebuild OOM
-        // or executor loss poisons every timed pass downstream, and an
-        // empty catch would leave only timing anomalies as evidence.
-        try { consume(fn(spark, sfDir)) } catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] prebuild $name failed: ${e.getClass.getName}")
-        }
-        graft.queries.QueryCaches.releaseAll(spark)
-      }
-    }
-    for (pass <- 1 to passes) {
-      var pos = 0
-      // one stage-canary sample per suite pass: heavier than the CPU/IO
-      // canaries (8 shuffles), so it rides at pass boundaries rather
-      // than every 20 queries — 3 samples across a run span the same
-      // wall-clock window the queries do
-      try stageCanarySeries += ((pass, 0, stageCanaryTime()))
-      catch { case _: Throwable => () }
-      try jobCanarySeries += ((pass, 0, jobCanaryTime()))
-      catch { case _: Throwable => () }
-      // fresh deterministic shuffle per pass: same seed → same order on a
-      // re-run of the same pass, different order across passes
-      val order = new scala.util.Random(7919L * pass).shuffle(baseOrder)
-      order.foreach { case (name, fn) =>
-        if (pos % canaryEvery == 0) {
-          canarySeries += ((pass, pos, canaryTime()))
-          ioCanarySeries += ((pass, pos, ioCanaryTime()))
-        }
-        val t0 = System.nanoTime()
-        val err =
-          try { consume(fn(spark, sfDir)); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.queries.QueryCaches.releaseAll(spark) // untimed: hygiene, not query cost
-        timesBy(name) = timesBy.getOrElse(name, Vector.empty) :+ dt
-        err.foreach(e => if (!errBy.contains(name)) errBy(name) = e)
-        pos += 1
-      }
-      canarySeries += ((pass, pos, canaryTime()))
-      ioCanarySeries += ((pass, pos, ioCanaryTime()))
-    }
-    def med(xs: Seq[Double]): Double = {
-      val t = xs.sorted
-      if (t.size % 2 == 1) t(t.size / 2)
-      else (t(t.size / 2 - 1) + t(t.size / 2)) / 2.0
-    }
-    val results = baseOrder.map { case (name, _) =>
-      val runs = timesBy(name)
+    val metaCanaryMed = Harness.attempt("[bench] meta canary")(metaCanary()).getOrElse(0.0)
+    val measured = measure(spark, sfDir, selected.toSeq, passes)
+    val results = measured.queries.map { case (name, q) =>
+      val runs = q.times
       val times = runs.sorted
       // warm = median EXCLUDING suite-pass 1, which absorbs this plan's
       // codegen/JIT and (for cache-building queries) the first
       // population of driver-side sketches — the cold/warm gap is the
       // per-query answer to "is this a regression or a warmup cost"
-      val warm = if (runs.size > 1) med(runs.drop(1)) else runs.head
-      (name, med(runs), warm, times.head, times.last, errBy.get(name))
+      val warm = if (runs.size > 1) Harness.median(runs.drop(1)) else runs.head
+      (name, Harness.median(runs), warm, times.head, times.last, q.err)
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     def qmap(rs: Seq[(String, Double)], prec: String): String =
       rs.map { case (k, v) => "\"" + k + "\":" + prec.format(v) }
         .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, _, _, Some(e)) => s"\"" + k + "\":" + jstr(e) }
+    val errs = results.collect { case (k, _, _, _, _, Some(e)) => Harness.json(k) + ":" + Harness.json(e) }
     val errJson = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
     val medians = results.map { case (k, med, _, _, _, _) => (k, med) }
     val warms = results.map { case (k, _, warm, _, _, _) => (k, warm) }
@@ -518,7 +553,7 @@ object Bench {
       val s = (if (series.size > 2) series.drop(1) else series).sorted
       if (s.isEmpty) (0.0, 1.0)
       else {
-        val m = med(s)
+        val m = Harness.median(s)
         val p90 = s(math.min(s.size - 1, math.ceil(0.9 * s.size).toInt - 1))
         (m, if (m > 0) p90 / m else 1.0)
       }
@@ -526,22 +561,22 @@ object Bench {
     def seriesJson(series: Seq[(Int, Int, Double)]): String = series
       .map { case (p, pos, t) => s"[$p,$pos,${"%.4f".format(t)}]" }
       .mkString("[", ",", "]")
-    val (canaryMed, loadRatio) = loadIdx(canarySeries.map(_._3).toSeq)
-    val (ioCanaryMed, ioLoadRatio) = loadIdx(ioCanarySeries.map(_._3).toSeq)
-    val canaryJson = seriesJson(canarySeries.toSeq)
-    val ioCanaryJson = seriesJson(ioCanarySeries.toSeq)
+    val (canaryMed, loadRatio) = loadIdx(measured.canary.map(_._3))
+    val (ioCanaryMed, ioLoadRatio) = loadIdx(measured.ioCanary.map(_._3))
+    val canaryJson = seriesJson(measured.canary)
+    val ioCanaryJson = seriesJson(measured.ioCanary)
     // stage canary: only `passes` samples, so the median is over all of
     // them (its own warmup already ran untimed before pass 1)
     val stageCanaryMed = {
-      val s = stageCanarySeries.map(_._3).toSeq
-      if (s.isEmpty) 0.0 else med(s)
+      val s = measured.stageCanary.map(_._3)
+      if (s.isEmpty) 0.0 else Harness.median(s)
     }
-    val stageCanaryJson = seriesJson(stageCanarySeries.toSeq)
+    val stageCanaryJson = seriesJson(measured.stageCanary)
     val jobCanaryMed = {
-      val s = jobCanarySeries.map(_._3).toSeq
-      if (s.isEmpty) 0.0 else med(s)
+      val s = measured.jobCanary.map(_._3)
+      if (s.isEmpty) 0.0 else Harness.median(s)
     }
-    val jobCanaryJson = seriesJson(jobCanarySeries.toSeq)
+    val jobCanaryJson = seriesJson(measured.jobCanary)
 
     // Regression report vs the prior round's base: flag movement ≥30%
     // AND ≥0.3 s — the absolute floor keeps millisecond queries' jitter out.
@@ -675,7 +710,7 @@ object Bench {
         s"base $detailName stays untouched; re-run on a quiet window")
     val detailPath = new java.io.File(lastName).getAbsolutePath
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec",$unadjJson"warm_total":${"%.3f".format(warmTotal)},"passes":$passes,"queries":${qmap(medians, "%.6f")},"warm":${qmap(warms, "%.6f")},"minmax":$minmax,"canary":$canaryJson,"canary_med":${"%.4f".format(canaryMed)},"load_ratio":${"%.2f".format(loadRatio)},"io_canary":$ioCanaryJson,"io_canary_med":${"%.4f".format(ioCanaryMed)},"io_load_ratio":${"%.2f".format(ioLoadRatio)},"fs_canary":${"%.5f".format(fsCanary)},"meta_canary":${"%.5f".format(metaCanaryMed)},"stage_canary":$stageCanaryJson,"stage_canary_med":${"%.4f".format(stageCanaryMed)},"job_canary":$jobCanaryJson,"job_canary_med":${"%.4f".format(jobCanaryMed)},"canary_factor":${"%.3f".format(canaryFactor)},"stage_factor":${"%.3f".format(stageFactor)},"cross_env":$crossEnv,"regression_basis":"norm_min_vs_prev_band","regressions":${deltaMap(regressed)},"regressions_cross_env":${deltaMap(regressedEnv)},"regressions_stage_env":${deltaMap(regressedStageEnv)},"regressions_median":${deltaMap(regressedMed)},"improvements":${deltaMap(improved)},"n_compared":${compared.size},"n_err":${errs.size}$errJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$unadjJson"warm_total":${"%.3f".format(warmTotal)},"passes":$passes,"queries":${qmap(medians, "%.6f")},"warm":${qmap(warms, "%.6f")},"minmax":$minmax,"phases":${phasesJson(measured.queries)},"canary":$canaryJson,"canary_med":${"%.4f".format(canaryMed)},"load_ratio":${"%.2f".format(loadRatio)},"io_canary":$ioCanaryJson,"io_canary_med":${"%.4f".format(ioCanaryMed)},"io_load_ratio":${"%.2f".format(ioLoadRatio)},"fs_canary":${"%.5f".format(fsCanary)},"meta_canary":${"%.5f".format(metaCanaryMed)},"stage_canary":$stageCanaryJson,"stage_canary_med":${"%.4f".format(stageCanaryMed)},"job_canary":$jobCanaryJson,"job_canary_med":${"%.4f".format(jobCanaryMed)},"canary_factor":${"%.3f".format(canaryFactor)},"stage_factor":${"%.3f".format(stageFactor)},"cross_env":$crossEnv,"regression_basis":"norm_min_vs_prev_band","regressions":${deltaMap(regressed)},"regressions_cross_env":${deltaMap(regressedEnv)},"regressions_stage_env":${deltaMap(regressedStageEnv)},"regressions_median":${deltaMap(regressedMed)},"improvements":${deltaMap(improved)},"n_compared":${compared.size},"n_err":${errs.size}$errJson,"sf":"$sfDir"}"""
     val w = new java.io.PrintWriter(detailPath, "UTF-8")
     try w.println(detail) finally w.close()
     promotedName.foreach { n =>

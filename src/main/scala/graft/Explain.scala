@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: prints the formatted physical plan of the
   * named queries (or a default headline set) so scan pushdown
   * (PushedFilters / ReadSchema), broadcast strategies, and
@@ -30,20 +28,11 @@ object Explain {
         "q_quantile_sketch", "q_lm_score", "q_embed_covariance",
         "q_anomaly_mad", "q_triangle_count", "q_weighted_sample",
         "q_ivf_train", "q_ann_recall", "q_geotiff_catalog")
-    // optional extra session confs (optimization r20) so routed-plan
-    // variants (e.g. spark.graft.freqitems.forceBroadcast) can be
-    // dumped for the plan-evidence files: SPARK_GRAFT_EXTRA_CONF="k=v;…"
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val b0 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[4] / 4 shuffle partitions, the recipe the committed plans/
+    // files were printed at (and SparkSpecBase's). Routed-plan variants
+    // (e.g. spark.graft.freqitems.forceBroadcast) are dumped through
+    // SPARK_GRAFT_EXTRA_CONF="k=v;…" (Harness.session).
+    val spark = Harness.session(cores = 4, partitions = 4, logLevel = "ERROR")
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case Some(fn) =>

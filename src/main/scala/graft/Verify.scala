@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // no .crc sidecars from Spark's own local writes (see scaladoc)
-    graft.sinks.S3Sink.disableLocalWriteChecksums(spark)
+    // reuses a session already running in this JVM (getOrCreate); no
+    // warm-up, so a caller's own session runs only the dump
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // fixture-schema tripwire: a regenerated fixture with a drifted
     // encoding must surface as ONE named problem here, not as N
@@ -46,21 +38,9 @@ object Verify {
       // 100-query dump doesn't accumulate storage across queries
       graft.queries.QueryCaches.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // self-contained error record: a green-row-only correctness report
     // can mask a zeroed pack (round 8) — errors.json names every query
@@ -68,8 +48,8 @@ object Verify {
     // auditable standalone
     val errJson =
       (contractViolations.zipWithIndex.map { case (v, i) =>
-        s"${q(s"_fixture_contract_$i")}: ${q(v)}" } ++
-       failures.map { case (k, v) => s"${q(k)}: ${q(v)}" })
+        s"${Harness.json(s"_fixture_contract_$i")}: ${Harness.json(v)}" } ++
+       failures.map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" })
         .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     val nBad = failures.size + contractViolations.size

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point (SRC-6; the reference's argparse `main`,
   * ETL.py:505–577): run the composed ETL over an .asc tree.
   *
@@ -31,17 +29,7 @@ object PipelineMain {
     val updatedAt = opts.getOrElse("updated_at",
       java.time.Instant.now().toString)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // no .crc sidecars from Spark's own local writes (see scaladoc)
-    graft.sinks.S3Sink.disableLocalWriteChecksums(spark)
+    val spark = graft.Harness.session()
 
     val regions = (opts.get("regions_geojson"), opts.get("regions_json")) match {
       // SRC-3: a GeoJSON FeatureCollection (the feature-service response

@@ -41,20 +41,14 @@ object EtlQueries {
     */
   private[graft] def pipelineTree(s: SparkSession): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_pipe_tree"
-    SideStores.ensure(out) {
-      val root = new java.io.File(out)
-      if (root.exists()) {
-        java.nio.file.Files.walk(root.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.delete(p); () })
-      }
+    SideStores.stagedTree(out) { stage =>
       val pCodes = Lookups.parameters.map(_._1)
       val tCodes = Lookups.periods.map(_._1)
       val rCodes = Lookups.regions.map(_._1)
       for (k <- 0 until 25) {
         val base = s"grid_${pCodes(k % 16)}_NZ_norm_" +
           s"${Lookups.statistics(k % 3)}_1991-2020_${tCodes(k % 17)}"
-        val sub = new java.io.File(out, rCodes(k % 17))
+        val sub = new java.io.File(stage.toFile, rCodes(k % 17))
         sub.mkdirs()
         java.nio.file.Files.writeString(sub.toPath.resolve(s"$base.asc"),
           graft.raster.GridGen.genText(k))
@@ -79,20 +73,14 @@ object EtlQueries {
     // other's memoized tree within one JVM (keying recipe + aliasing
     // rationale: SideStores.keyedTmpPath).
     val out = SideStores.keyedTmpPath("graft_stream_tree_", dir)
-    SideStores.ensure(out) {
-      val root = new java.io.File(out)
-      if (root.exists()) {
-        java.nio.file.Files.walk(root.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.delete(p); () })
-      }
+    SideStores.stagedTree(out) { stage =>
       Manifest.build(s, dir)
         .filter(col("file_id") % 97 === 0)
         .select("file_id", "region_code", "file_name")
         .orderBy("file_id") // last writer on a colliding path = max(file_id)
         .collect()
         .foreach { r =>
-          val sub = new java.io.File(out, r.getAs[String]("region_code"))
+          val sub = new java.io.File(stage.toFile, r.getAs[String]("region_code"))
           sub.mkdirs()
           java.nio.file.Files.writeString(
             sub.toPath.resolve(r.getAs[String]("file_name")),
@@ -139,15 +127,9 @@ object EtlQueries {
     */
   private[graft] def spjTree(): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_spj_tree"
-    SideStores.ensure(out) {
-      val root = new java.io.File(out)
-      if (root.exists()) {
-        java.nio.file.Files.walk(root.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.delete(p); () })
-      }
+    SideStores.stagedTree(out) { stage =>
       for (r <- 0 until 16; k <- 0 to (r % 3)) {
-        val sub = new java.io.File(out, f"r$r%02d")
+        val sub = new java.io.File(stage.toFile, f"r$r%02d")
         sub.mkdirs()
         val ncols = r + k + 1
         val body = s"ncols $ncols\nnrows 1\nxllcorner 0.0\nyllcorner 0.0\n" +

@@ -1526,17 +1526,14 @@ object RelationalQueries {
       // is the dim's first real exchange; its trailing repartition(8)
       // still forces the ENSURE_REQUIREMENTS exchange the skew-split
       // injection needs, and the fact side keeps its repartition(8)
-      // (>1 mapper). Same distinct key set, same result; old shape
-      // reachable for A/B via spark.graft.skewaqe.dimShape=lineage.
-      // Plan diff: 8 -> 7 Exchanges (the dim-side RoundRobin(8) below
-      // the distinct is gone) — plans/r21/q_skew_join_aqe_*.txt.
-      val dimBase =
-        if (s.conf.getOption("spark.graft.skewaqe.dimShape").contains("lineage"))
-          fact.select("k")
-        else t(s, dir, "lineitem")
-          .select(when(col("l_orderkey") % 10 < 8, 0L)
-            .otherwise(col("l_orderkey")).as("k"))
-      val dim = dimBase.distinct().repartition(8)
+      // (>1 mapper). Same distinct key set, same result (Round21OpsSpec
+      // keeps the lineage dim as its reference). Plan diff: 8 -> 7
+      // Exchanges (the dim-side RoundRobin(8) below the distinct is
+      // gone) — plans/r21/q_skew_join_aqe_*.txt.
+      val dim = t(s, dir, "lineitem")
+        .select(when(col("l_orderkey") % 10 < 8, 0L)
+          .otherwise(col("l_orderkey")).as("k"))
+        .distinct().repartition(8)
         .withColumn("tag", col("k") % 7)
       fact.hint("merge").join(dim, "k")
         .groupBy("tag")

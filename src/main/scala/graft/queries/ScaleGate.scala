@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   * loss (measured: see OPTIMIZATION_r21.md), at corpus scale the
   * group-count parallelism ceiling dominates. The gate keeps the
   * fixture bench on the measured-faster plan and routes real corpora to
-  * the scale plan; the conf override exists so ProbeAB can measure both
+  * the scale plan; the conf override exists so `Probe ab` can measure both
   * arms in one session and specs can pin the two routes row-identical.
   *
   * The byte threshold is the same 1 GiB the freq-itemsets gate uses:

@@ -563,54 +563,34 @@ object SimilarityQueries {
     // equi-join on vec_id+1 for the pairs — no shuffle beyond the
     // join, flat at 100 TB.
     "q_random_projection" -> ((s, dir) => {
-      val signArr = s"array(${rpSigns.mkString(",")})"
       val qx = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1024.0) AS BIGINT))"
-      // Shape gate (optimization r20, guide §4): the `hof` form inlines
-      // the 64-element quantize transform INSIDE the projection
-      // aggregate's lambda, so each of the 16×64 interpreted steps
-      // re-evaluates the whole transform — ~65k lambda evals + 1k array
-      // allocs PER ROW, the allocation storm behind the query's
-      // superlinear scale steps (BENCH_SCALE40_TOP10.json: 2.17/1.79
-      // normalized vs ~1.26 suite-wide). The default `idot` shape
-      // quantizes ONCE per row and takes y_j = vec_idot(q, sign_col_j)
-      // against 16 constant-folded literal sign columns — the same
-      // Σᵢ qxᵢ·s(i,j) in the same exact int64 arithmetic (Round20OpsSpec
-      // pins shape equality row-for-row; the oracle hash is unchanged).
-      // `hof` is kept for ProbeAB and that spec, not as a serving path.
-      val useHof = s.conf.getOption("spark.graft.rp.shape").contains("hof")
+      // Quantize ONCE per row and take y_j = vec_idot(q, sign_col_j)
+      // against 16 constant-folded literal sign columns (optimization
+      // r20, guide §4). The retired nested-HOF form inlined the 64-element
+      // quantize transform INSIDE the projection aggregate's lambda — ~65k
+      // lambda evals + 1k array allocs PER ROW, the allocation storm
+      // behind the query's superlinear scale steps
+      // (BENCH_SCALE40_TOP10.json: 2.17/1.79 normalized vs ~1.26
+      // suite-wide). Both compute the same Σᵢ qxᵢ·s(i,j) in exact int64;
+      // Round20OpsSpec keeps the HOF form as its row-for-row reference.
       def side(m: Int, idc: String, qc: String, pc: String) = {
-        val base = emb(s, dir).filter(col("vec_id") % 50 === m)
-        if (useHof)
-          base.select(col("vec_id").as(idc),
-            expr(qx).as(qc),
-            expr(
-              s"""transform(sequence(1, 16), j ->
-                 |  aggregate(sequence(1, 64), CAST(0 AS BIGINT),
-                 |    (acc, i) -> acc + element_at($qx, i) *
-                 |                element_at($signArr, (i - 1) * 16 + j)))"""
-                .stripMargin).as(pc))
-        else {
-          // column j of the row-major 64×16 sign matrix, as a foldable
-          // bigint-array literal (ConstantFolding collapses it once)
-          def signColJ(j: Int) =
-            (0 until 64).map(i => s"${rpSigns(i * 16 + (j - 1))}L").mkString(",")
-          base.select(col("vec_id").as(idc), expr(qx).as(qc))
-            .select(col(idc), col(qc), expr(
-              (1 to 16).map(j => s"vec_idot($qc, array(${signColJ(j)}))")
-                .mkString("array(", ", ", ")")).as(pc))
-        }
+        // column j of the row-major 64×16 sign matrix, as a foldable
+        // bigint-array literal (ConstantFolding collapses it once)
+        def signColJ(j: Int) =
+          (0 until 64).map(i => s"${rpSigns(i * 16 + (j - 1))}L").mkString(",")
+        emb(s, dir).filter(col("vec_id") % 50 === m)
+          .select(col("vec_id").as(idc), expr(qx).as(qc))
+          .select(col(idc), col(qc), expr(
+            (1 to 16).map(j => s"vec_idot($qc, array(${signColJ(j)}))")
+              .mkString("array(", ", ", ")")).as(pc))
       }
       val a = side(0, "a_id", "qa", "pa")
       val b = side(1, "b_id", "qb", "pb")
-      // d2 under `idot`: ‖x−y‖² = x·x − 2·x·y + y·y — exact in int64
-      // (|qx|≤2¹⁰ ⇒ terms ≤2²⁷; |p|≤2¹⁶ ⇒ ≤2³⁶), three codegen'd dots
-      // instead of ~130 interpreted zip/aggregate lambda steps per pair
+      // d2: ‖x−y‖² = x·x − 2·x·y + y·y — exact in int64 (|qx|≤2¹⁰ ⇒
+      // terms ≤2²⁷; |p|≤2¹⁶ ⇒ ≤2³⁶), three codegen'd dots instead of ~130
+      // interpreted zip/aggregate lambda steps per pair
       def d2(x: String, y: String) =
-        if (useHof) expr(
-          s"aggregate(zip_with($x, $y, (u, v) -> (u - v) * (u - v)), " +
-            "CAST(0 AS BIGINT), (acc, e) -> acc + e)")
-        else expr(
-          s"vec_idot($x, $x) - 2L * vec_idot($x, $y) + vec_idot($y, $y)")
+        expr(s"vec_idot($x, $x) - 2L * vec_idot($x, $y) + vec_idot($y, $y)")
       a.join(b, col("b_id") === col("a_id") + 1)
         .select(col("a_id"), col("b_id"),
           d2("qa", "qb").as("d2_orig"),

@@ -8,10 +8,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   * scan plans ONE input partition, and everything fused above it — a
   * shingle/hash kernel, the Expand of a count-distinct rewrite, a
   * percentile agg's value buffer, a WindowGroupLimit sort — runs on one
-  * core while the other 31 idle. ProbePhases named the cost: the
-  * fixture's mid-tier queries spend 1.3–1.7 s of exec across < 50
-  * tasks. This is the guide's input-skew case ("one huge unsplittable
-  * file … repartition immediately after the read"), and it appears on
+  * core while the other 31 idle. A per-query build/plan/exec split (now
+  * Bench's `phases` detail) named the cost: the fixture's mid-tier
+  * queries spend 1.3–1.7 s of exec across < 50 tasks. This is the
+  * guide's input-skew case ("one huge unsplittable file … repartition
+  * immediately after the read"), and it appears on
   * real clusters whenever a scan (or a selective pushed filter) leaves
   * far fewer live partitions than cores.
   *
@@ -40,7 +41,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
   /** `spark.graft.spread` ∈ auto (default) | off | force — off/force
-    * exist for same-session A/B measurement (tools.ProbeAB) and plan
+    * exist for same-session A/B measurement (`tools.Probe ab`) and plan
     * pins; the serving default is always the adaptive gate.
     *
     * The repartition deliberately carries NO explicit partition count:

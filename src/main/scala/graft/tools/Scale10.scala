@@ -196,13 +196,9 @@ object Scale10 {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_sf1x"
     val n = if (args.length > 2) args(2).toInt else 10
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions: the recipe the fixtures behind the
+    // committed BENCH_SCALE* artifacts were written with
+    val s = graft.Harness.session(partitions = 32)
     build(s, srcDir, outDir, n)
     println(s"scale$n fixture written to $outDir")
     s.stop()

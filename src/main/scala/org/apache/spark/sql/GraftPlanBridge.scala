@@ -3,12 +3,13 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** The `private[sql]` doors a plan-level library extension needs:
-  * wrapping a custom [[LogicalPlan]] node into a user-facing DataFrame,
-  * and listing a session's query execution listeners so one can be
-  * registered at most once. Everything else in graft.plans stays in
-  * graft's own package — this object exists solely because
-  * `Dataset.ofRows` and `listListeners` are package-private.
+/** The package-private doors graft needs: wrapping a custom
+  * [[LogicalPlan]] node into a user-facing DataFrame, listing a
+  * session's query execution listeners so one can be registered at most
+  * once, and waiting for the listener bus to deliver every posted event
+  * (graft.Harness.JobCounter). Everything else stays in graft's own
+  * packages — this object exists solely because `Dataset.ofRows`,
+  * `listListeners` and `listenerBus` are package-private.
   */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -16,4 +17,7 @@ object GraftPlanBridge {
 
   def listeners(spark: SparkSession): Seq[QueryExecutionListener] =
     spark.listenerManager.listListeners().toSeq
+
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -102,6 +102,30 @@ class BenchBaseSpec extends AnyFunSuite {
       ("BENCH_DETAIL_graft_sf1x_28234660_LAST.json", None))
   }
 
+  test("an unreadable base compares nothing and is logged with its file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_benchbase")
+    // a directory where the detail file should be, and a detail whose
+    // canary number does not parse
+    val asDir = java.nio.file.Files.createDirectory(dir.resolve("BENCH_DETAIL.json"))
+    val garbled = dir.resolve("BENCH_DETAIL_SUBSET.json")
+    java.nio.file.Files.writeString(garbled,
+      detail(unadj = false).replace("0.0148", "0.01.48"))
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val bases =
+      try Seq(asDir, garbled).map(f => Bench.readPrevBase(f.toFile, sf))
+      finally System.setErr(stderr)
+    bases.foreach(b => assert(b.med.isEmpty && b.canaryMed.isEmpty))
+    val log = err.toString("UTF-8")
+    Seq(asDir, garbled).foreach { f =>
+      assert(log.contains(s"PREV BASE UNREADABLE (${f})"), log)
+    }
+    java.nio.file.Files.delete(garbled)
+    java.nio.file.Files.delete(asDir)
+    java.nio.file.Files.delete(dir)
+  }
+
   test("the sink-heavy set names only filesystem-writing queries that exist") {
     // every member must be a real query (a typo would silently disable
     // the cross-env routing for the query it meant to protect)

@@ -221,11 +221,29 @@ class Round20OpsSpec extends SparkSpecBase {
 
   test("q_random_projection: the vec_idot kernel shape is row-identical " +
     "to the original nested-HOF shape (same exact int64 projection)") {
-    val fn = SparkEntry.queries("q_random_projection")
-    val idot = fn(spark, sf).collect().toSeq
+    val idot = SparkEntry.queries("q_random_projection")(spark, sf).collect().toSeq
     assert(idot.nonEmpty, "fixture must produce audit pairs")
-    withConf("spark.graft.rp.shape" -> "hof") {
-      assert(fn(spark, sf).collect().toSeq === idot)
-    }
+    // the original shape: the quantize transform inlined inside each of
+    // the 16 projection aggregates, and d2 as a zip_with/aggregate
+    val signArr = s"array(${graft.queries.SimilarityQueries.rpSigns.mkString(",")})"
+    val qx = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1024.0) AS BIGINT))"
+    def side(m: Int, idc: String, qc: String, pc: String) =
+      spark.read.parquet(s"$sf/embeddings.parquet").filter(col("vec_id") % 50 === m)
+        .select(col("vec_id").as(idc), expr(qx).as(qc), expr(
+          s"""transform(sequence(1, 16), j ->
+             |  aggregate(sequence(1, 64), CAST(0 AS BIGINT),
+             |    (acc, i) -> acc + element_at($qx, i) *
+             |                element_at($signArr, (i - 1) * 16 + j)))"""
+            .stripMargin).as(pc))
+    def d2(x: String, y: String) = expr(
+      s"aggregate(zip_with($x, $y, (u, v) -> (u - v) * (u - v)), " +
+        "CAST(0 AS BIGINT), (acc, e) -> acc + e)")
+    val hof = side(0, "a_id", "qa", "pa")
+      .join(side(1, "b_id", "qb", "pb"), col("b_id") === col("a_id") + 1)
+      .select(col("a_id"), col("b_id"),
+        d2("qa", "qb").as("d2_orig"), d2("pa", "pb").as("d2_proj"))
+      .withColumn("ratio_pm", expr("d2_proj * 10000 div nullif(16 * d2_orig, 0)"))
+      .orderBy("a_id")
+    assert(hof.collect().toSeq === idot)
   }
 }

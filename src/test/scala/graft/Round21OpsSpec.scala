@@ -106,7 +106,18 @@ class Round21OpsSpec extends SparkSpecBase {
     "dim (same distinct key set)") {
     val fresh = rows("q_skew_join_aqe")
     assert(fresh.nonEmpty)
-    assert(rows("q_skew_join_aqe",
-      "spark.graft.skewaqe.dimShape" -> "lineage") === fresh)
+    // the original shape: the dim derived from the repartitioned fact
+    val fact = spark.read.parquet(s"$sf/lineitem.parquet").repartition(8)
+      .select(when(col("l_orderkey") % 10 < 8, 0L)
+        .otherwise(col("l_orderkey")).as("k"), col("l_extendedprice"))
+    val dim = fact.select("k").distinct().repartition(8)
+      .withColumn("tag", col("k") % 7)
+    val lineage = fact.hint("merge").join(dim, "k")
+      .groupBy("tag")
+      .agg(count(lit(1)).as("n"),
+        round(sum(col("l_extendedprice").cast("decimal(24,6)"))
+          .cast("double"), 2).as("rev"))
+      .orderBy("tag")
+    assert(lineage.collect().toSeq === fresh)
   }
 }

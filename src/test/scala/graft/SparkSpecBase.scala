@@ -5,19 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs; one per suite (lazy). */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // same local-write behavior as the Verify/Bench/PipelineMain entry
-    // points: no .crc sidecars (S3Sink.disableLocalWriteChecksums doc)
-    graft.sinks.S3Sink.disableLocalWriteChecksums(s)
-    s
-  }
+  /** Explain's recipe (local[4], 4 shuffle partitions), so spec plans
+    * match the committed plans/ files; Harness.session also turns off
+    * .crc sidecars, as at every entry point.
+    */
+  lazy val spark: SparkSession = Harness.session(cores = 4, partitions = 4)
 
   val sf: String = "/root/testdata/sf0.001"
 

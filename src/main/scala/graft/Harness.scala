@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 
 /** The run harness every entry point shares (Bench, Verify, Explain,
   * PipelineMain and the tools): one local session recipe, one untimed
-  * warm-up, one timed query run and one JSON string escaper.
+  * warm-up and one timed query run.
   */
 object Harness {
 
@@ -132,18 +132,4 @@ object Harness {
     if (t.size % 2 == 1) t(t.size / 2)
     else (t(t.size / 2 - 1) + t(t.size / 2)) / 2.0
   }
-
-  /** JSON string literal. Escapes quote, backslash and every control
-    * char below 0x20: a tab or CR in builder-authored SQL would
-    * otherwise make a reader's `json.load` fail.
-    */
-  def json(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -38,20 +41,17 @@ object Verify {
       // 100-query dump doesn't accumulate storage across queries
       graft.queries.QueryCaches.releaseAll(spark)
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def writeJson(name: String, entries: Seq[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$name"),
+        compact(JObject(entries.map { case (k, v) => k -> JString(v) }.toList)))
+    writeJson("oracle_sql.json",
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_(k)) }.toSeq)
     // self-contained error record: a green-row-only correctness report
     // can mask a zeroed pack (round 8) — errors.json names every query
     // that threw, plus any fixture-contract violations, so the dump is
     // auditable standalone
-    val errJson =
-      (contractViolations.zipWithIndex.map { case (v, i) =>
-        s"${Harness.json(s"_fixture_contract_$i")}: ${Harness.json(v)}" } ++
-       failures.map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" })
-        .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    writeJson("errors.json", contractViolations.zipWithIndex.map { case (v, i) =>
+      s"_fixture_contract_$i" -> v } ++ failures)
     val nBad = failures.size + contractViolations.size
     if (nBad > 0)
       System.err.println(s"[verify] $nBad problem(s): " +

@@ -1985,11 +1985,16 @@ object DedupQueries {
         .agg(count(lit(1)).as("n_toks"),
           md5(expr("array_join(transform(sort_array(collect_list(" +
             "struct(pos, tok))), x -> x.tok), ' ')")).as("ch"))
-      // forceRouted: plan-pin hook so PlanShapeSpec can assert the
-      // large-corpus shape without a 200k-doc fixture
-      val bigCorpus = s.conf.getOption("spark.graft.cdc.forceRouted")
-        .contains("true") ||
-        s.read.parquet(s"$dir/documents.parquet").count() > 200000L
+      // Sized from FS metadata, not a count job (ScaleGate): sf0.1's
+      // documents are 594,568 B for 5,000 docs ≈ 119 B/doc, so the 200k-doc
+      // cutoff sits near 23.8 MB — exactly where Scale10's 40× fixture
+      // (200,000 docs; permuted copies encode within 0.3% of the source)
+      // lands. 32 MiB ≈ 282k docs at that density keeps every fixture run
+      // so far (sf0.001–sf0.1, 10×/20×/40×) on the plain plan with ~40%
+      // headroom. forceRouted "true"/"false" pins either plan (PlanShapeSpec
+      // asserts the large-corpus shape without a 200k-doc fixture).
+      val bigCorpus = ScaleGate.route(s, "spark.graft.cdc.forceRouted", "true", "false",
+        s"$dir/documents.parquet", bytes = 32L << 20)
       val marked = if (!bigCorpus) {
         val dup = chunks.groupBy("ch")
           .agg(min("doc_id").as("mn"), max("doc_id").as("mx"))

@@ -487,12 +487,14 @@ object EtlQueries {
     // with the sinks' I/O in the timed window. The full-cover region
     // boxes make the clip arithmetic closed-form (clip = whole grid),
     // so the oracle rebuilds all 400 catalog rows — names, titles, and
-    // clip statistics — from `nation` + the dim CTEs alone.
+    // clip statistics — from `nation` + the dim CTEs alone. The returned
+    // frame reads the written catalog lazily, so the output tree goes at
+    // the harness's per-query release, after the caller consumed it.
     "q_pipeline_e2e" -> ((s, dir) => {
       val tree = pipelineTree(s)
       val out = java.nio.file.Files.createTempDirectory("graft_pipe_e2e_")
-        .toString
-      val res = graft.etl.Pipeline.run(s, tree, Lookups.fullCoverRegions(s), out,
+      QueryCaches.defer(() => SideStores.rmTree(out), s"delete of pipeline output $out")
+      val res = graft.etl.Pipeline.run(s, tree, Lookups.fullCoverRegions(s), out.toString,
         updatedAt = "2026-01-01T00:00:00Z")
       res.catalog.select(col("base_name"), col("region_code"),
           col("region_title"), col("new_file_name"), col("clipped_name"),

@@ -167,7 +167,8 @@ object GraphOps {
     // the final round's checkpoint blocks back the labels lineage —
     // register their release with the harness
     val lastRdds = curRdds
-    QueryCaches.defer(() => lastRdds.foreach(_.unpersist(blocking = false)))
+    QueryCaches.defer(() => lastRdds.foreach(_.unpersist(blocking = false)),
+      "unpersist of the last iteration's RDDs")
     val labels = nodes
       .join(cur.select(col("u").as("id"), col("v").as("parent")),
         Seq("id"), "left_outer")

@@ -16,7 +16,7 @@ object QueryCaches {
   private val live = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
   private val liveBroadcasts =
     scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
-  private val deferred = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+  private val deferred = scala.collection.mutable.ArrayBuffer.empty[(String, () => Unit)]
 
   /** Persist `ds` (default storage level) and track it for later release. */
   def cache[T](ds: Dataset[T]): Dataset[T] = synchronized {
@@ -35,9 +35,11 @@ object QueryCaches {
     * planned lazily by the caller, and Catalyst reads SQLConf at planning
     * time, so an eager try/finally would undo the setting before the plan
     * exists. Deferring the restore to the harness's per-query release keeps
-    * the conf live exactly while the query is, then puts it back.
+    * the conf live exactly while the query is, then puts it back. `what`
+    * names the hook in the stderr line [[releaseAll]] prints if it fails.
     */
-  def defer(f: () => Unit): Unit = synchronized { deferred += f }
+  def defer(f: () => Unit, what: String = "deferred cleanup"): Unit =
+    synchronized { deferred += (what -> f) }
 
   /** Set a session conf for the current query's lifetime: the previous
     * value (or absence) is restored at [[releaseAll]]. The save/set/
@@ -50,30 +52,27 @@ object QueryCaches {
     defer(() => prev match {
       case Some(p) => s.conf.set(key, p)
       case None    => s.conf.unset(key)
-    })
+    }, s"restore of conf $key")
   }
 
-  /** Unpersist every tracked Dataset and broadcast. Safe to call when
-    * nothing is tracked; non-blocking so the caller's next query isn't
-    * stalled on block eviction.
+  /** Unpersist every tracked Dataset and broadcast, then run the
+    * deferred hooks. Safe to call when nothing is tracked; non-blocking
+    * so the caller's next query isn't stalled on block eviction. A step
+    * that fails prints one stderr line naming it, and the remaining
+    * steps still run.
     */
   def releaseAll(spark: SparkSession): Unit = synchronized {
-    live.foreach { ds =>
-      try ds.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-    }
+    live.foreach(ds => graft.Harness.attempt("[caches] unpersist of a cached dataset")(
+      ds.unpersist(blocking = false)))
     live.clear()
-    liveBroadcasts.foreach { b =>
-      try b.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-    }
+    liveBroadcasts.foreach(b => graft.Harness.attempt(s"[caches] unpersist of broadcast ${b.id}")(
+      b.unpersist(blocking = false)))
     liveBroadcasts.clear()
     // LIFO: nested/repeated defers for the same conf key must unwind in
     // reverse registration order, or the earliest (pre-change) value is
     // overwritten by a later hook that captured the already-changed value
-    deferred.reverseIterator.foreach { f =>
-      try f()
-      catch { case _: Throwable => () }
+    deferred.reverseIterator.foreach { case (what, f) =>
+      graft.Harness.attempt(s"[caches] $what")(f())
     }
     deferred.clear()
   }

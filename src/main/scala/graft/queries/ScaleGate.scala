@@ -9,9 +9,11 @@ import org.apache.spark.sql.SparkSession
   * `q_pack_sequences`' chunked-prefix-sum route and `q_freq_itemsets`'
   * `spark.graft.freqitems.forceBroadcast` broadcast route — each reads
   * FS metadata, never a count job (the statePartitions precedent).
-  * Other gates are not converted yet: `q_cdc_chunk_dedup`'s bigCorpus
-  * route still runs a `count()` job over the documents, and the
-  * band-cap gates count cached band frames (graft.plans.BandJoin).
+  * `q_cdc_chunk_dedup`'s hot-chunk route gates on the documents' size
+  * the same way (`spark.graft.cdc.forceRouted`), and
+  * `EventStreams.statePartitions` sizes the events through [[size]].
+  * Not converted yet: the band-cap gates count cached band frames
+  * (graft.plans.BandJoin).
   *
   * Why a gate instead of adopting the scale shape unconditionally: the
   * scale shapes this round adds (banded per-group ranks, chunked
@@ -35,11 +37,25 @@ object ScaleGate {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The filesystem length of `path` in bytes — metadata only, no job,
+    * no I/O beyond a listing — or None when it cannot be listed, after a
+    * warning naming `confKey`, the path, the error and `fallback` (what
+    * the caller does instead).
+    */
+  def size(s: SparkSession, confKey: String, path: String, fallback: String): Option[Long] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      Some(p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength)
+    } catch {
+      case NonFatal(e) =>
+        log.warn(s"$confKey: could not size $path ($e); $fallback")
+        None
+    }
+
   /** True = take the scale route. `confKey` may force either arm
     * (`scaleValue` / `fixtureValue`); any other (or absent) value
-    * auto-routes on the input path's filesystem length — metadata only,
-    * no job, no I/O beyond a listing. A listing that fails takes the
-    * fixture route and logs a warning naming the key, path and error.
+    * auto-routes on the input path's [[size]] against `bytes`. A listing
+    * that fails takes the fixture route.
     */
   def route(s: SparkSession, confKey: String, scaleValue: String,
             fixtureValue: String, path: String,
@@ -47,16 +63,6 @@ object ScaleGate {
     s.conf.getOption(confKey) match {
       case Some(v) if v == scaleValue => true
       case Some(v) if v == fixtureValue => false
-      case _ =>
-        try {
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .getContentSummary(p).getLength > bytes
-        } catch {
-          case NonFatal(e) =>
-            log.warn(s"$confKey: could not size $path ($e); " +
-              "taking the fixture route")
-            false
-        }
+      case _ => size(s, confKey, path, "taking the fixture route").exists(_ > bytes)
     }
 }

@@ -57,12 +57,6 @@ object SideStores {
       val stage = java.nio.file.Files.createTempDirectory(
         outPath.getParent, outPath.getFileName.toString + ".stage")
       build(stage)
-      def rmTree(p: java.nio.file.Path): Unit = {
-        val walk = java.nio.file.Files.walk(p) // closed: leaks a dir handle otherwise
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.delete(q); () })
-        finally walk.close()
-      }
       // An existing tree is moved ASIDE atomically (not deleted in place):
       // deleting before the publish re-opens the partial-visibility window
       // for a concurrent-JVM reader (ADVICE r18). The aside copy is deleted
@@ -87,6 +81,14 @@ object SideStores {
       }
       if (trash != null) rmTree(trash)
     }
+
+  /** Delete the tree at `p`, deepest entries first. */
+  def rmTree(p: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(p) // closed: leaks a dir handle otherwise
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(q => { java.nio.file.Files.delete(q); () })
+    finally walk.close()
+  }
 
   /** Build-once value cache with the same contract as [[ensure]]: the
     * value must be a pure function of the key (which should encode the

@@ -254,13 +254,13 @@ object EventStreams {
     // tables. The returned frame holds its resolved plan, so dropping
     // the NAME after the consumer is done (releaseAll) frees the rows
     // to GC without breaking the in-flight result.
-    graft.queries.QueryCaches.defer { () =>
+    graft.queries.QueryCaches.defer(() => {
       df.sparkSession.catalog.dropTempView(name)
       // forget the stopped query too: the manager tracks terminated
       // queries (for awaitAnyTermination) until reset, and each one
       // pins its sink
       df.sparkSession.streams.resetTerminated()
-    }
+    }, s"drop of memory-sink view $name")
     out
   }
 
@@ -293,19 +293,10 @@ object EventStreams {
     s.conf.getOption(key)
       .map(_.toInt)
       .getOrElse {
-        val path = s"$dir/events.parquet"
         val bytes =
           if (dir.isEmpty) 0L
-          else try {
-            val p = new org.apache.hadoop.fs.Path(path)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration)
-              .getContentSummary(p).getLength
-          } catch {
-            case NonFatal(e) =>
-              log.warn(s"$key: could not size $path ($e); " +
-                "taking the minimum partition count")
-              0L
-          }
+          else graft.queries.ScaleGate.size(s, key, s"$dir/events.parquet",
+            "taking the minimum partition count").getOrElse(0L)
         val cores = s.sparkContext.defaultParallelism
         math.max(2, math.min((bytes >> 20).toInt, cores))
       }

@@ -1,5 +1,6 @@
 package graft
 
+import org.json4s.jackson.JsonMethods.{compact, parse}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for Bench's prev-base parsing and the banded-normalized
@@ -17,6 +18,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * query's max-over-passes (its variance band), the CPU-canary median
   * (normalization denominator), and the fs write-canary (sink-heavy
   * environment key) — parsed from the same committed detail file.
+  *
+  * The replay cases run the pure adjudication over the committed
+  * BENCH_DETAIL.json (read from the build's base directory) and the
+  * base it was adjudicated against (test resource
+  * bench/prev_base.json, the BENCH_DETAIL.json of commit
+  * 98521e7^): the verdict must be the one the detail records. A
+  * promoted base replaces both files together.
   */
 class BenchBaseSpec extends AnyFunSuite {
 
@@ -131,5 +139,90 @@ class BenchBaseSpec extends AnyFunSuite {
     // the cross-env routing for the query it meant to protect)
     Bench.SinkHeavy.foreach(k =>
       assert(SparkEntry.queries.contains(k), s"SinkHeavy names unknown query $k"))
+  }
+
+  private def recorded: String = new String(java.nio.file.Files.readAllBytes(
+    java.nio.file.Paths.get("BENCH_DETAIL.json")), "UTF-8")
+
+  private def prevBase: String = {
+    val src = scala.io.Source.fromResource("bench/prev_base.json", getClass.getClassLoader)
+    try src.mkString finally src.close()
+  }
+
+  private def committed: Bench.Record = Bench.fromJson(parse(recorded))
+  private def base: Bench.Record = Bench.fromJson(parse(prevBase))
+  private def replay(cur: Bench.Record): Bench.Verdict = Bench.adjudicate(cur, base)
+
+  private val VerdictKeys = Seq("canary_factor", "stage_factor", "cross_env",
+    "regressions", "regressions_cross_env", "regressions_stage_env",
+    "regressions_median", "improvements", "n_compared", "disp_frac2", "unadjudicated")
+
+  test("the committed detail replays to its recorded verdict") {
+    val cur = committed
+    val v = replay(cur)
+    assert(v.canaryFactor == 1.0)
+    assert(math.abs(v.stageFactor - 1.202) < 5e-4, v.stageFactor)
+    assert(v.crossEnv)
+    assert(v.nCompared == 295)
+    assert(v.regressions.isEmpty && v.regressionsCrossEnv.isEmpty &&
+      v.regressionsStageEnv.isEmpty && v.regressionsMedian.isEmpty, v)
+    assert(v.improvements.map(_._1).toSet == Set("q_ann_ivf_probe2", "q_ann_rerank",
+      "q_approx_distinct", "q_decile_lift", "q_embedding_outliers", "q_fpband_recall_prod",
+      "q_graph_bfs", "q_graph_hits", "q_kmv_intersect", "q_pipeline_e2e",
+      "q_sample_per_group", "q_stream_anomaly", "q_stream_dedup_cluster",
+      "q_stream_file_ingest"))
+    assert(v.dispFrac2 == 0.0 && !v.unadjudicated)
+    // every verdict field as the writer prints it is the recorded one
+    val written = parse(compact(Bench.detailJson(cur, v)))
+    VerdictKeys.foreach(k => assert(written \ k == parse(recorded) \ k, k))
+    // the summaries recomputed from the detail's own series
+    def r(x: Double, scale: Int) =
+      BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(r(Bench.loadIdx(cur.canary)._2, 2) == 1.32)
+    assert(r(Bench.loadIdx(cur.ioCanary)._2, 2) == 1.36)
+    assert(r(Bench.seriesMed(cur.stageCanary), 4) == 0.4157)
+  }
+
+  /** The committed detail with each `mins` query's fastest pass set to
+    * read the given seconds after the verdict's normalization, and the
+    * fs canary at `fsRatio` × the base's.
+    */
+  private def withMins(mins: Map[String, Double], fsRatio: Double = 1.0): Bench.Record = {
+    val cur = committed
+    val norm = replay(cur).stageFactor
+    cur.copy(min = cur.min ++ mins.map { case (q, m) => q -> m * norm },
+      fsCanary = base.fsCanary.map(_ * fsRatio))
+  }
+
+  /** Normalized seconds well above `q`'s band in the base. */
+  private def aboveBand(q: String): Double = {
+    val b = base
+    2 * math.max(b.med(q), b.max(q)) + 0.5
+  }
+
+  test("a query whose min is raised above its band is flagged, and only it") {
+    // q_sparse_knn (base median 1.40 s, band 2.01 s) moves ≥30% but stays
+    // inside its band once the stage factor normalizes it; the CPU factor
+    // alone would flag it, so it rides the advisory stage-env list
+    val v = replay(withMins(Map("q_agg_pricing" -> aboveBand("q_agg_pricing"),
+      "q_sparse_knn" -> 1.95)))
+    assert(v.regressions.map(_._1) == Seq("q_agg_pricing"), v)
+    assert(v.regressionsStageEnv.map(_._1) == Seq("q_sparse_knn"), v)
+    assert(v.regressionsCrossEnv.isEmpty && !v.unadjudicated)
+  }
+
+  test("an fs-canary move above 1.5x routes a sink-heavy flag to cross_env") {
+    val raised = Map("q_pipeline_e2e" -> aboveBand("q_pipeline_e2e"))
+    val same = replay(withMins(raised))
+    assert(!same.crossEnv && same.regressions.map(_._1) == Seq("q_pipeline_e2e"), same)
+    val moved = replay(withMins(raised, fsRatio = 1.6))
+    assert(moved.crossEnv && moved.regressions.isEmpty, moved)
+    assert(moved.regressionsCrossEnv.map(_._1) == Seq("q_pipeline_e2e"), moved)
+  }
+
+  test("a written detail reads back as its record") {
+    val cur = committed
+    val back = Bench.fromJson(parse(compact(Bench.detailJson(cur, replay(cur)))))
+    assert(back == cur)
   }
 }

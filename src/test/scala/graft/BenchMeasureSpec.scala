@@ -1,5 +1,7 @@
 package graft
 
+import org.json4s.jackson.JsonMethods.compact
+
 /** Bench's measurement on the shared spec session: each query's timed
   * pass is split into build/plan/exec with its job counts, and the
   * record-only "phases" map leaves the regression base untouched.
@@ -34,11 +36,14 @@ class BenchMeasureSpec extends SparkSpecBase {
         s""""queries":{"q_agg_pricing":0.345,"q_pipeline_e2e":1.5},""" +
         s""""minmax":{"q_agg_pricing":[0.300000,0.412000],"q_pipeline_e2e":[1.4,1.9]},""" +
         s""""canary_med":0.0148,"fs_canary":0.00210,"stage_canary_med":0.4321,"sf":"$base"}"""
-    val phases = Bench.phasesJson(measured.queries)
+    val rec = Bench.record(base, 1, measured, fsCanary = 0.0021, metaCanary = 0.01)
+    val phases = compact(Bench.detailJson(rec, Bench.adjudicate(rec, rec)) \ "phases")
     assert(phases.contains("\"q_pipeline_e2e\":{\"build\":"), phases)
     val withPhases = plain.replace(""""canary_med"""", s""""phases":$phases,"canary_med"""")
     assert(withPhases != plain)
-    assert(Bench.parsePrevBase(withPhases, base) == Bench.parsePrevBase(plain, base))
+    val parsed = Bench.parsePrevBase(withPhases, base)
+    assert(parsed.map(_.phases.keySet) == Right(names.toSet))
+    assert(parsed.map(_.copy(phases = Map.empty)) == Bench.parsePrevBase(plain, base))
   }
 
   test("the median split is the middle pass, or the mean of the two middle") {

@@ -63,4 +63,28 @@ class CacheHygieneSpec extends SparkSpecBase {
     val leaked = persistentIds -- before
     assert(leaked.isEmpty, s"Pipeline leaked: $leaked")
   }
+
+  test("a failing deferred hook is logged by name and the later hooks still run") {
+    val order = scala.collection.mutable.Buffer.empty[Int]
+    QueryCaches.defer(() => order += 1)
+    QueryCaches.defer(() => throw new IllegalStateException("boom"), "restore of conf k")
+    QueryCaches.defer(() => order += 3)
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try QueryCaches.releaseAll(spark) finally System.setErr(stderr)
+    assert(order.toSeq == Seq(3, 1))
+    val log = err.toString("UTF-8")
+    assert(log.contains("[caches] restore of conf k failed: " +
+      "java.lang.IllegalStateException: boom"), log)
+  }
+
+  test("q_pipeline_e2e leaves no output tree behind after a timed run") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def trees = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_pipe_e2e_")).toSet
+    val before = trees
+    val run = Harness.timedRun(spark, sf, SparkEntry.queries("q_pipeline_e2e"))
+    assert(run.isRight, run)
+    assert((trees -- before).isEmpty, s"left behind: ${trees -- before}")
+  }
 }

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Pre-commit check: build the benchmark (perfbench/) against the
-# program, then execute EVERY declared SparkEntry query once at
+# program, replay the committed bench verdict (BenchBaseSpec), then
+# execute EVERY declared SparkEntry query once at
 # sf0.001 in strict mode and compare every result with the DuckDB
 # oracle (tools/check_oracle.py). A program name the benchmark uses
 # going missing, any query throw, fixture-contract violation or oracle
@@ -18,6 +19,9 @@ trap 'rm -rf "$OUT"' EXIT
 # the way perfbench/run.py exports it (the last line of jar paths)
 CP="$(sbt -batch -Dsbt.log.noformat=true compile "export Runtime/fullClasspath" | grep -v '^\[' | grep '\.jar' | tail -1)"
 (cd perfbench && PERFBENCH_PROGRAM_CP="$CP" sbt -batch compile)
+# the bench adjudication: the committed BENCH_DETAIL.json must replay to
+# its recorded verdict (no Spark session needed)
+sbt -batch "testOnly graft.BenchBaseSpec"
 SPARK_GRAFT_STRICT=1 sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check_oracle.py "$SF" "$OUT"
 echo "preflight OK: all declared queries executed and match the oracle at $SF"
